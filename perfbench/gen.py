@@ -4,9 +4,12 @@ The seed drives everything the inputs depend on: the doc_id salt (which
 makes ``datagen.build_spans`` re-draw each document's kind mix, tables,
 rasters, natural giants and shuffled span order), the document texts, which
 documents carry a planted malformed MINIPDF span, and which datagen
-documents are merged into the skew giants. The composition is fixed per
-workload (document count, natural-giant count, planted count), so seeds
-change which documents play each role, never how much work there is.
+documents are merged into the skew giants. For the curate queries it
+drives the texts, languages, sources and doc_id order of a ``documents``
+table and which documents form its planted near-duplicate chains. The
+composition is fixed (document count, natural-giant count, planted count,
+chain count and length), so seeds change which documents play each role,
+never how much input there is.
 
 The program only ever sees the parquet tables written here.
 """
@@ -132,12 +135,60 @@ def skew_giants(seed: int, count: int, min_spans: int, prefix: str = "giant") ->
     return Corpus(out, set())
 
 
-def write(corpus: Corpus, path: str, files: int = INPUT_FILES) -> None:
-    """Write ``corpus`` as a directory of parquet files (round-robin rows)."""
+def write(corpus: Corpus, path: str) -> None:
+    """Write ``corpus`` as a directory of INPUT_FILES parquet files
+    (round-robin rows)."""
     os.makedirs(path, exist_ok=True)
-    for k in range(files):
-        rows = corpus.docs[k::files]
+    for k in range(INPUT_FILES):
+        rows = corpus.docs[k::INPUT_FILES]
         pq.write_table(
             pa.Table.from_pylist(rows, schema=CORPUS_SCHEMA),
             os.path.join(path, f"part-{k:05d}.parquet"),
         )
+
+
+# The curate queries' documents table has the schema of the sf data sets'
+# ``documents.parquet``. Its words come from a vocabulary large enough that
+# unrelated documents share no word 3-shingle, so the connected components
+# of the minhash-LSH graph are exactly the planted chains for every seed.
+# Which members of a chain the LSH pairs link (hence how many rounds the
+# connected-components loop runs) still depends on the seed.
+_SYL = "ka lo mi ne ru sa ti vo pe da gu ha ji ko ma no pa re se to".split()
+CURATE_WORDS = [a + b + c for a in _SYL for b in _SYL for c in _SYL[:8]]
+LANGS = ("en", "zh", "es", "fr", "de")
+LANG_WEIGHTS = (41, 15, 15, 15, 14)
+DOCUMENTS_SCHEMA = pa.schema(
+    [("doc_id", pa.int64()), ("text", pa.string()), ("lang", pa.string()),
+     ("source", pa.string()), ("n_chars", pa.int64())]
+)
+
+
+def curate_documents(seed: int, n: int, chains: int, chain_len: int, edits: int) -> pa.Table:
+    """``n`` documents of 10-100 words; ``chains`` x ``chain_len`` of them
+    form near-duplicate chains (each member is the previous one with
+    ``edits`` words replaced). doc_ids are 0..n-1 in seeded order."""
+    rng = random.Random(f"{seed}:curate")
+
+    def words(k: int) -> list[str]:
+        return [rng.choice(CURATE_WORDS) for _ in range(k)]
+
+    texts = [words(rng.randint(10, 100)) for _ in range(n - chains * chain_len)]
+    for _ in range(chains):
+        member = words(rng.randint(60, 100))
+        for _ in range(chain_len):
+            texts.append(member)
+            member = list(member)
+            for pos in rng.sample(range(len(member)), edits):
+                member[pos] = rng.choice(CURATE_WORDS)
+    ids = list(range(n))
+    rng.shuffle(ids)
+    rows = sorted(
+        (
+            {"doc_id": i, "text": " ".join(t),
+             "lang": rng.choices(LANGS, LANG_WEIGHTS)[0],
+             "source": f"src{rng.randrange(20)}", "n_chars": len(" ".join(t))}
+            for i, t in zip(ids, texts)
+        ),
+        key=lambda r: r["doc_id"],
+    )
+    return pa.Table.from_pylist(rows, schema=DOCUMENTS_SCHEMA)

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload extract_full --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload extract_full --seed 1 --seconds 15 --trace 0
 
 Run from the repository root. Builds its inputs from ``--seed``, starts
 one Spark session at local[<nproc>] through ``get_spark``, warms up, runs
@@ -75,7 +75,7 @@ def _stop_spark(spark) -> None:
             proc.stdin.close()
             proc.wait(timeout=60)
     deadline = time.time() + 60
-    while len(process_tree()) > 1 and time.time() < deadline:
+    while len(process_tree(os.getpid())) > 1 and time.time() < deadline:
         time.sleep(0.1)
 
 
@@ -93,10 +93,12 @@ def main(argv: list[str] | None = None) -> int:
         (WORK / d).mkdir(parents=True)
     os.environ["TMPDIR"] = str(WORK / "tmp")
 
+    from pyspark import SparkContext
+
     from perfbench import metrics
     from perfbench.probe import kernel_probe
     from perfbench.trace import RssSampler, Spans, parse_event_log
-    from perfbench.workloads import WORKLOADS
+    from perfbench.workloads import WORKLOADS, CurateQueries
 
     if args.workload not in WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; one of {sorted(WORKLOADS)}",
@@ -112,43 +114,53 @@ def main(argv: list[str] | None = None) -> int:
         t0 = time.perf_counter()
         wl.warm_up()
         setup["warmup_s"] = time.perf_counter() - t0
-        with RssSampler() as rss:
+        # the JVM and the Python workers it starts; not this process, which
+        # also holds the benchmark's own inputs and checks
+        with RssSampler(SparkContext._gateway.proc.pid) as rss:
             wl.timed_loop(args.seconds)
         problems, n_failed = wl.check()
         if args.trace:
-            # one more pass, traced: rows offered to each sink are counted
-            # first from the same starting state, outside the traced pass
-            offered = wl.offered_rows(len(wl.walls))
+            wl.count_offered()
             spans = Spans(spark.sparkContext)
             traced = wl.run_pass(len(wl.walls), spans)
             wl.release()
             problems += wl.check()[0]
+            if wl.traces_curate:
+                curate = CurateQueries(spark, str(WORK), args.seed)
+                curate.run_pass(Spans())  # warm-up
+                curate_spans = Spans(spark.sparkContext)
+                curate.run_pass(curate_spans)
+                problems += curate.check()
     finally:
         _stop_spark(spark)
 
-    todo = wl.todo_corpus()
     cores = int(os.environ["SPARK_GRAFT_CPUS"])
     if args.trace:
-        result = metrics.per_layer(
-            setup, kernel_probe(todo, args.seed), parse_event_log(str(WORK / "eventlog")),
-            spans.walls(), traced.wall_s, wl.walls, traced.mode, offered, cores,
+        walls = spans.walls()
+        ledger = parse_event_log(str(WORK / "eventlog"))
+        own = metrics.extract_layers(
+            kernel_probe(wl.todo_corpus(), args.seed), ledger, walls, traced.mode, wl.offered,
+            cores,
         )
+        if wl.traces_curate:
+            own.update(metrics.curate_layers(ledger, curate_spans.walls(), cores))
+        own["process.peak_rss_mb"] = rss.peak_mb
+        result = metrics.per_layer(setup, own, ledger, walls, traced.wall_s, wl.walls, cores)
     else:
+        todo = wl.todo_corpus()
         result = metrics.end_to_end(
-            setup, wl.walls, len(todo.docs), todo.n_spans(), n_failed + len(problems),
-            rss.peak_mb,
-        )
+            setup, wl.walls, len(todo.docs), todo.n_spans(), n_failed + len(problems))
     shutil.rmtree(WORK, ignore_errors=True)
     for p in problems:
         print(f"perfbench: CHECK FAILED: {p}", file=sys.stderr)
     print(
-        f"perfbench workload={wl.name} seed={args.seed} docs={len(todo.docs)} "
-        f"spans={todo.n_spans()} planted={len(todo.planted)} failed={n_failed} "
-        f"passes={len(wl.walls)} pass_walls_s={[round(w, 3) for w in wl.walls]}"
+        f"perfbench workload={wl.name} seed={args.seed} docs={len(wl.todo)} "
+        f"failed_docs={n_failed} passes={len(wl.walls)} peak_rss_mb={rss.peak_mb:.0f} "
+        f"pass_walls_s={[round(w, 3) for w in wl.walls]}"
     )
     print(json.dumps({
         "correct": not problems,
-        "attempted": len(todo.docs) * len(wl.walls),
+        "attempted": len(wl.todo) * len(wl.walls),
         "failed": len(problems),
         "metrics": result,
     }))

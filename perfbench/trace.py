@@ -20,6 +20,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 PYTHON_KERNEL_SCOPES = ("MapInPandas", "MapInArrow", "PythonMapInArrow")
+RSS_INTERVAL_S = 0.2
 
 
 class Spans:
@@ -81,25 +82,23 @@ class LayerStats:
 
 
 def event_log_conf(log_dir: str) -> dict[str, str]:
-    """Session settings that write an uncompressed JSON event log."""
+    """Session settings that write one uncompressed JSON event-log file
+    per application (Spark 4 rolls the log into a directory by default)."""
     return {
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": "file://" + os.path.abspath(log_dir),
         "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
     }
 
 
 def _event_files(log_dir: str) -> list[str]:
-    """Event-log files of every application in ``log_dir``: plain files, or
-    rolling ``eventlog_v2_*`` directories of ``events_<n>_*`` parts."""
-    files = []
-    for p in sorted(glob.glob(os.path.join(log_dir, "*"))):
-        if os.path.isdir(p):
-            parts = glob.glob(os.path.join(p, "events_*"))
-            files += sorted(parts, key=lambda f: int(os.path.basename(f).split("_")[1]))
-        elif not os.path.basename(p).startswith("."):
-            files.append(p)
-    return files
+    """Event-log files of every application in ``log_dir`` (the hidden
+    ``.crc`` checksum files skipped)."""
+    return [
+        p for p in sorted(glob.glob(os.path.join(log_dir, "*")))
+        if not os.path.basename(p).startswith(".")
+    ]
 
 
 def parse_event_log(log_dir: str) -> dict[str, LayerStats]:
@@ -172,10 +171,10 @@ def _children() -> dict[int, list[int]]:
     return kids
 
 
-def process_tree(root: int | None = None) -> list[int]:
-    """``root`` and all of its live descendants (default: this process)."""
+def process_tree(root: int) -> list[int]:
+    """``root`` and all of its live descendants."""
     kids = _children()
-    out, todo = [], [root or os.getpid()]
+    out, todo = [], [root]
     while todo:
         p = todo.pop()
         out.append(p)
@@ -183,7 +182,7 @@ def process_tree(root: int | None = None) -> list[int]:
     return out
 
 
-def tree_rss_mb(root: int | None = None) -> float:
+def tree_rss_mb(root: int) -> float:
     total = 0
     for p in process_tree(root):
         try:
@@ -195,19 +194,19 @@ def tree_rss_mb(root: int | None = None) -> float:
 
 
 class RssSampler:
-    """Samples the summed RSS of this process tree (driver, JVM, Python
-    workers) from /proc on a background thread and keeps the peak."""
+    """Samples the summed RSS of the process tree under ``root`` from /proc
+    every RSS_INTERVAL_S on a background thread and keeps the peak."""
 
-    def __init__(self, interval_s: float = 0.2):
-        self.interval_s = interval_s
+    def __init__(self, root: int):
+        self.root = root
         self.peak_mb = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
     def _run(self) -> None:
         while not self._stop.is_set():
-            self.peak_mb = max(self.peak_mb, tree_rss_mb())
-            self._stop.wait(self.interval_s)
+            self.peak_mb = max(self.peak_mb, tree_rss_mb(self.root))
+            self._stop.wait(RSS_INTERVAL_S)
 
     def __enter__(self) -> "RssSampler":
         self._thread.start()
@@ -216,4 +215,4 @@ class RssSampler:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join()
-        self.peak_mb = max(self.peak_mb, tree_rss_mb())
+        self.peak_mb = max(self.peak_mb, tree_rss_mb(self.root))

@@ -1,21 +1,27 @@
-"""The workloads: ``jobs/extract_job.py``'s call sequence in a closed loop.
+"""The workloads, each a batch job run in a closed loop with one client.
 
-Each pass is one batch job with one client: read the input table, resume
-against the output's lineage, extract, then the four keyed appends with
-the lineage committed last. A pass is timed from the first read until the
-lineage append returns. Every pass starts from the same output state, so
-the passes of a run repeat one job.
+``extract_full`` and ``extract_increment`` run ``jobs/extract_job.py``'s
+call sequence: read the input table, resume against the output's lineage,
+extract, then the four keyed appends with the lineage committed last. A
+pass is timed from the first read until the lineage append returns, and
+every pass starts from the same output state, so the passes of a run
+repeat one job. ``CurateQueries`` runs contract queries of
+``__spark_entry__`` over a generated ``documents`` table for the operator
+layer of ``extract_full``'s traced runs.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
-import statistics
 import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
+
+import __spark_entry__
 from docling_rag_spark.pipeline import (
     choose_extraction_mode,
     doc_metadata,
@@ -25,13 +31,13 @@ from docling_rag_spark.pipeline import (
 from docling_rag_spark.sources.corpus import read_corpus
 from docling_rag_spark.sources.sinks import idempotent_append
 
-from . import checks, gen
-from .metrics import OUTPUTS
+from . import checks, gen, metrics
 from .trace import Spans
 
 # keys of extract_job's appends, in its order (the lineage commit last)
-OUTPUT_KEYS = dict(zip(OUTPUTS, (["doc_id", "order"], ["id"], ["doc_id"], ["run_id", "doc_id"])))
-INPUT_REPEATS = 3  # input generation is repeated; set-up reports the median
+OUTPUT_KEYS = dict(
+    zip(metrics.OUTPUTS, (["doc_id", "order"], ["id"], ["doc_id"], ["run_id", "doc_id"]))
+)
 
 
 @dataclass
@@ -86,15 +92,6 @@ def extract_job(
     return JobResult(time.perf_counter() - t0, run_id, chosen)
 
 
-def offered_rows(spark, input_path: str, out: str, run_id: str, mode: str) -> dict[str, int]:
-    """Rows the job would hand to each sink from the current output state
-    (counted, not appended)."""
-    _, todo, frames = _plan(spark, input_path, out, run_id, mode, Spans())
-    counts = {name: _output(name, todo, frames).count() for name in OUTPUT_KEYS}
-    spark.catalog.clearCache()
-    return counts
-
-
 class Workload:
     """Set-up, warm-up, timed passes and checks of one workload.
 
@@ -103,6 +100,7 @@ class Workload:
 
     name = ""
     mode = ""
+    traces_curate = False
 
     def __init__(self, spark, work: str, seed: int):
         self.spark, self.work, self.seed = spark, work, seed
@@ -112,35 +110,32 @@ class Workload:
         self.walls: list[float] = []
         self.last: JobResult | None = None
         self.must_sample: set[str] = set()
+        self.offered: dict[str, int] = {}
 
     def prepare_inputs(self) -> float:
-        """Generate the inputs INPUT_REPEATS times; return the median wall."""
-        walls = []
-        for _ in range(INPUT_REPEATS):
-            t0 = time.perf_counter()
-            shutil.rmtree(self.inputs, ignore_errors=True)
-            self.make_inputs()
-            walls.append(time.perf_counter() - t0)
-        return statistics.median(walls)
+        """Generate the inputs; return the wall."""
+        t0 = time.perf_counter()
+        self.make_inputs()
+        return time.perf_counter() - t0
 
     def make_inputs(self) -> None:
         raise NotImplementedError
 
     def warm_up(self) -> None:
-        raise NotImplementedError
+        """One untimed pass: a session's first pass runs several times
+        slower (JIT, code generation, Python worker start). A warm-up over a
+        100-document slice cost about as much and left the next pass ~40%
+        slower than the one after it."""
+        self.run_pass("warm")
+        self.release()
 
     def reset_output(self) -> None:
-        raise NotImplementedError
+        shutil.rmtree(self.out, ignore_errors=True)
 
     def run_pass(self, i, spans: Spans | None = None) -> JobResult:
         self.reset_output()
         self.last = extract_job(self.spark, self.input, self.out, f"pass{i}", self.mode, spans)
         return self.last
-
-    def offered_rows(self, i) -> dict[str, int]:
-        """Rows pass ``i`` hands to each sink (from the reset output)."""
-        self.reset_output()
-        return offered_rows(self.spark, self.input, self.out, f"pass{i}", self.mode)
 
     def release(self) -> None:
         self.spark.catalog.clearCache()
@@ -164,31 +159,28 @@ class Workload:
             self.seed, self.must_sample,
         )
 
+    def count_offered(self) -> None:
+        """Rows the next pass will hand to each sink, counted (not
+        appended) from the same reset output state."""
+        self.reset_output()
+        _, todo, frames = _plan(self.spark, self.input, self.out, "counted", self.mode, Spans())
+        self.offered = {name: _output(name, todo, frames).count() for name in OUTPUT_KEYS}
+        self.release()
+
 
 class ExtractFull(Workload):
-    """A fresh table: every document is new; narrow mode."""
+    """A fresh table: every document is new; narrow mode. Its traced runs
+    also measure the operator layer (CurateQueries)."""
 
     name = "extract_full"
     mode = "narrow"
-    DOCS = 2500
-    WARM_DOCS = 2500
+    DOCS = 800
+    traces_curate = True
 
     def make_inputs(self) -> None:
         self.corpus = gen.documents(self.seed, self.DOCS, "d")
         self.todo = self.corpus.ids
         gen.write(self.corpus, self.input)
-        gen.write(gen.documents(self.seed, self.WARM_DOCS, "w"), os.path.join(self.inputs, "warm"))
-
-    def warm_up(self) -> None:
-        """One job over as many other documents: passes right after a
-        small-slice warm-up ran 15-50% slower than later ones (JIT and heap
-        sizing still settling)."""
-        out = os.path.join(self.work, "warm_out")
-        extract_job(self.spark, os.path.join(self.inputs, "warm"), out, "warm", self.mode)
-        self.release()
-
-    def reset_output(self) -> None:
-        shutil.rmtree(self.out, ignore_errors=True)
 
 
 class ExtractIncrement(Workload):
@@ -204,10 +196,10 @@ class ExtractIncrement(Workload):
 
     name = "extract_increment"
     mode = "auto"
-    OLD_DOCS = 750
-    NEW_DOCS = 250
-    GIANTS = 4
-    GIANT_SPANS = 6000
+    OLD_DOCS = 600
+    NEW_DOCS = 200
+    GIANTS = 1
+    GIANT_SPANS = 5000
 
     def make_inputs(self) -> None:
         old = gen.documents(self.seed, self.OLD_DOCS, "o") + gen.skew_giants(
@@ -222,8 +214,7 @@ class ExtractIncrement(Workload):
 
     def warm_up(self) -> None:
         """Build the prior output from the old documents in ``auto`` mode:
-        its giants send it down the spread path too, at the timed pass's
-        size, which also warms the timed pass's stages."""
+        its giants send it down the spread path the timed pass takes."""
         self.prior = os.path.join(self.work, "prior")
         extract_job(self.spark, os.path.join(self.inputs, "old"), self.prior, "prior", "auto")
         self.release()
@@ -231,6 +222,49 @@ class ExtractIncrement(Workload):
     def reset_output(self) -> None:
         shutil.rmtree(self.out, ignore_errors=True)
         shutil.copytree(self.prior, self.out)
+
+
+class CurateQueries:
+    """The operator layer: contract queries over a generated ``documents``
+    table, results collected to the driver: word chunking, the Gopher
+    quality filters, and near-duplicate clustering (minhash-LSH pairs, then
+    the iterative connected-components loop). Traced runs of
+    ``extract_full`` run one warm-up pass and one traced pass of it."""
+
+    DOCS = 1000
+    CHAINS = 40
+    CHAIN_LEN = 5
+    EDITS = 2
+    SF_TAG = "perfbench_curate"
+
+    def __init__(self, spark, work: str, seed: int):
+        self.spark = spark
+        self.sf = os.path.join(work, "in", self.SF_TAG)
+        self.results: dict[str, list[dict]] = {}
+        # disk memos the program keeps under data/ for this tag are cleared,
+        # so every run starts from the same state
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        for memo in glob.glob(os.path.join(root, "data", f"*_{self.SF_TAG}_*")):
+            shutil.rmtree(memo, ignore_errors=True)
+        os.makedirs(self.sf)
+        pq.write_table(
+            gen.curate_documents(seed, self.DOCS, self.CHAINS, self.CHAIN_LEN, self.EDITS),
+            os.path.join(self.sf, "documents.parquet"),
+        )
+
+    def run_pass(self, spans: Spans) -> None:
+        queries = __spark_entry__.queries()
+        for q in metrics.CURATE_QUERIES:
+            with spans.span(q):
+                self.results[q] = [r.asDict() for r in queries[q](self.spark, self.sf).collect()]
+        self.spark.catalog.clearCache()
+        # also drop the local checkpoint that backs dedup_clusters' result
+        # (a cache clear does not reach it)
+        for rdd in self.spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist(False)
+
+    def check(self) -> list[str]:
+        return checks.check_curate(self.sf, self.results)
 
 
 WORKLOADS = {w.name: w for w in (ExtractFull, ExtractIncrement)}
