@@ -4,7 +4,7 @@ These functions are the *specification* of extraction semantics. They are
 used both by the single-process oracle (tests/oracle parity) and inside the
 Spark ``mapInPandas`` stages — one definition, two execution contexts, so
 span-sequence equality holds by construction and the tests verify that the
-distributed plumbing (explode / shuffle / window re-ordering) preserves it.
+distributed plumbing (slicing / shuffle / window re-ordering) preserves it.
 
 Everything here is deterministic: no RNG, no wall clock, no external
 services (the reference delegates to docling-serve over HTTP,

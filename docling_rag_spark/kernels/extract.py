@@ -2,7 +2,8 @@
 
 ``extract_span`` is the one function both execution contexts run:
 - the Spark pipeline calls it inside an Arrow-vectorized ``mapInPandas``
-  stage over *exploded* span rows (docling_rag_spark/pipeline.py), and
+  stage over whole documents, or over reading-order slices of them in
+  spread mode (docling_rag_spark/pipeline.py), and
 - ``extract_document_oracle`` runs it single-process over a whole document
   (the stand-in for the reference's docling conversion,
   reference src/ingestion/document.py:116-188 + src/ingestion/pipeline.py:13-54).

@@ -1,11 +1,11 @@
 """Driver-facing wrappers for the core extraction pipeline (SURVEY.md §2.2).
 
-These run the real engine (corpus → mapInPandas extraction → window order →
-chunker → lineage) at the given sf. HTML/PDF parsing is not SQL-expressible
-directly, so the DuckDB oracles compare against committed GOLDEN parquet
-(tests/golden/extract_*.parquet) generated by the pure-Python single-process
-oracle (tests/make_extract_golden.py — no Spark involved), selected by a
-content digest of the ``documents`` view (``corpus_key``). The in-repo
+These run the real engine's default path (corpus → mapInPandas extraction,
+ordered in-kernel → chunker → lineage) at the given sf. HTML/PDF parsing is
+not SQL-expressible directly, so the DuckDB oracles compare against
+committed GOLDEN parquet (tests/golden/extract_*.parquet) generated by the
+pure-Python single-process oracle (tests/make_extract_golden.py — no Spark
+involved), selected by a content digest of the ``documents`` view (``corpus_key``). The in-repo
 span-sequence equality gate (tests/test_extraction_parity.py,
 BASELINE.json:15) additionally covers handcrafted edge docs.
 """
@@ -18,7 +18,7 @@ from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import chunk_spans, doc_metadata, extract_blocks, explode_spans, order_spans
+from ..pipeline import chunk_spans, doc_metadata, run_extraction
 from ..sources.corpus import corpus_for_sf
 
 
@@ -167,11 +167,11 @@ def _gc_stale_artifacts(
 
 
 def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared corpus→extract→order prefix of the extraction queries."""
+    """The shared corpus→extract→order prefix of the extraction queries —
+    the default (narrow) path of run_extraction, the one jobs run."""
     corpus = corpus_for_sf(spark, sf_dir)
     return _disk_memo(
-        spark, sf_dir, "extracted",
-        lambda: order_spans(extract_blocks(explode_spans(corpus))),
+        spark, sf_dir, "extracted", lambda: run_extraction(corpus)[0]
     )
 
 
@@ -194,8 +194,7 @@ def extract_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_metadata_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = corpus_for_sf(spark, sf_dir)
-    extracted = order_spans(extract_blocks(explode_spans(corpus)))
-    chunks = chunk_spans(extracted)
+    extracted, chunks, _ = run_extraction(corpus)
     return doc_metadata(corpus, extracted, chunks)
 
 
@@ -207,8 +206,6 @@ def extract_lineage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow pipeline (kernel + sentinel rows), disk-memoized per sf."""
 
     def pipe() -> DataFrame:
-        from ..pipeline import run_extraction
-
         corpus = corpus_for_sf(spark, sf_dir)
         lineage = run_extraction(corpus, run_id="lineage-gate")[2]
         return lineage.select("doc_id", "status", "n_spans_in", "n_blocks_out")

@@ -2,22 +2,25 @@
 
 Replaces the reference's single-process orchestration
 (reference src/ingestion/pipeline.py:13-54 — load → chunk → metadata →
-embed → insert) with one declarative DataFrame DAG, in two interchangeable
-physical shapes (identical output, tested):
+embed → insert) with one declarative DataFrame DAG. One extraction kernel
+serves two front ends (identical output, tested):
 
 NARROW (default — zero shuffles for extraction + lineage):
     read input table
       → [resume anti-join on lineage]             (E16, postgres.py:253-262)
-      → mapInPandas(whole-doc kernel)             (Arrow-vectorized; ordering
-         computed in-kernel; per-doc lineage sentinel rows)
-      → chunk assembly: running-token-sum window → segment → groupBy
+      → one kernel row per document
+      → mapInPandas(extraction kernel)            (Arrow-vectorized; ordering
+         computed in-kernel; one lineage sentinel row per kernel row)
+      → chunk assembly: doc_id exchange → streaming ChunkPacker
          (reference HybridChunker analog, src/ingestion/chunker.py:45-55)
 
 SPREAD (giant-document skew defuse — the north-rule salting path):
-    … → posexplode(spans) → round-robin repartition (one doc's 10^4 spans
-    become 10^4 rows spread over all tasks) → mapInPandas(per-span kernel)
-    → window row_number over (doc_id | offset, span_idx, block_seq)
-    → same chunk assembly
+    … → sort spans into reading order → cut into slices of at most
+    SPREAD_SLICE_SPANS spans (one kernel row each, ``part`` = slice rank)
+    → optional round-robin repartition (a giant's slices spread over all
+    tasks) → the same kernel → one window over doc_id ordered by
+    (part, order) → same chunk assembly; lineage = groupBy over the
+    slice sentinels
 
 Scale notes (100 TB):
 - Extraction is embarrassingly parallel per document → narrow is default;
@@ -25,7 +28,7 @@ Scale notes (100 TB):
   sort the extracted text (measured shuffle-I/O-bound at any core count).
   Pick spread only when single documents are large enough to straggle a
   task (SURVEY.md §7.3 #3).
-- Everything after the kernels is pure relational (whole-stage codegen).
+- Everything after the kernel is pure relational (whole-stage codegen).
 - See BENCH.md "What made it scale" for the measured pitfalls (task.cpus,
   many-file input, self-referencing-join kernel re-execution).
 """
@@ -48,161 +51,44 @@ if TYPE_CHECKING:
 
 MAX_TOKENS = 512  # reference src/config.py:34
 
-
-# --------------------------------------------------------------------------
-# stage 1: explode spans (narrow)
-# --------------------------------------------------------------------------
-def explode_spans(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans[]) → one row per span, carrying n_spans_in for lineage."""
-    return docs.select(
-        "doc_id",
-        # greatest(...,0): size(NULL)=NULL and legacy -1 — narrow reports 0
-        F.greatest(F.coalesce(F.size("spans"), F.lit(0)), F.lit(0)).alias(
-            "n_spans_in"
-        ),
-        F.posexplode_outer("spans").alias("span_idx", "span"),
-    ).select(
-        "doc_id",
-        "n_spans_in",
-        "span_idx",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.coalesce(F.col("span.offset"), F.lit(0)).alias("offset"),
-    )
+# spread mode's kernel row: at most this many spans. An ordinary document
+# stays one row; the smallest giant auto mode spreads (AUTO_SKEW_MIN_SPANS)
+# becomes 79+ rows. One row per span measured slower on extract_increment.
+SPREAD_SLICE_SPANS = 64
 
 
 # --------------------------------------------------------------------------
-# stage 2: the extraction kernel (mapInPandas)
+# the extraction kernel (mapInPandas) — both modes run it
 # --------------------------------------------------------------------------
-def _extract_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """Arrow-batched span extraction. One input span row → N block rows.
-
-    Per-span errors become dead-letter rows (error column set) instead of
-    failing the task — the reference's DocumentLoadError taxonomy
-    (src/ingestion/document.py:191-203, src/models.py) as data.
-    """
-    import pandas as pd
-    from pyspark import TaskContext
-
-    pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in (
-            "doc_id", "offset", "span_idx", "block_seq", "kind", "text",
-            "media_ref", "page_num", "error", "n_spans_in", "partition_id")}
-        for doc_id, off, sidx, kind, text, ref, n_in in zip(
-            pdf["doc_id"], pdf["offset"], pdf["span_idx"], pdf["kind"],
-            pdf["text"], pdf["media_ref"], pdf["n_spans_in"]
-        ):
-            try:
-                blocks = extract_span(kind, text, ref)
-            except Exception:
-                blocks = [("error", traceback.format_exc(limit=2), None, None)]
-            emitted = False
-            for seq, (k, t, r, page) in enumerate(blocks):
-                emitted = True
-                err = t if k == "error" else None
-                out["doc_id"].append(doc_id)
-                out["offset"].append(off)
-                out["span_idx"].append(sidx)
-                out["block_seq"].append(seq)
-                out["kind"].append("error" if err else k)
-                out["text"].append(None if err else t)
-                out["media_ref"].append(r)
-                out["page_num"].append(page)
-                out["error"].append(err)
-                out["n_spans_in"].append(n_in)
-                out["partition_id"].append(pid)
-            if not emitted:
-                # keep lineage complete: a span that extracts to nothing
-                # still counts toward its document
-                out["doc_id"].append(doc_id)
-                out["offset"].append(off)
-                out["span_idx"].append(sidx)
-                out["block_seq"].append(-1)
-                out["kind"].append("empty")
-                out["text"].append(None)
-                out["media_ref"].append(None)
-                out["page_num"].append(None)
-                out["error"].append(None)
-                out["n_spans_in"].append(n_in)
-                out["partition_id"].append(pid)
-        yield pd.DataFrame(out)
-
-
 _KERNEL_SCHEMA = (
-    "doc_id string, offset int, span_idx int, block_seq int, kind string, "
-    "text string, media_ref string, page_num int, error string, "
-    "n_spans_in int, partition_id int"
+    "doc_id string, part int, order int, kind string, text string, "
+    "media_ref string, page_num int, error string, n_spans_in long, "
+    "partition_id int"
 )
 
 
-SALT_BUCKETS = 16
-
-
-def extract_blocks(
-    spans: DataFrame, repartition_to: int | None = None, salt: str = "roundrobin"
-) -> DataFrame:
-    """Span rows → block rows.
-
-    ``repartition_to``: repartition width before the kernel — the
-    giant-document skew defuse (one doc's spans spread over all tasks).
-    * None (default): no shuffle — scan splits provide the parallelism
-      (a many-file Iceberg table at 100 TB is already well-split; shuffling
-      every raw payload byte would dominate the job).
-    * N > 0: explicit shuffle to N partitions (the north-rule salting knob).
-
-    ``salt`` picks the spread strategy:
-    * ``roundrobin``: maximum spread — every span lands anywhere; best when
-      a handful of giants dominate.
-    * ``keyed``: deterministic hash of (doc_id, span_idx % SALT_BUCKETS) —
-      a giant doc fans out over at most SALT_BUCKETS tasks while normal
-      docs stay (mostly) co-located, preserving doc-locality for fused
-      downstream stages; the classic salted-key recipe.
-    """
-    if repartition_to:
-        if salt == "keyed":
-            spans = spans.repartition(
-                repartition_to,
-                F.col("doc_id"),
-                F.col("span_idx") % SALT_BUCKETS,
-            )
-        else:
-            spans = spans.repartition(repartition_to)
-    return spans.mapInPandas(_extract_kernel, schema=_KERNEL_SCHEMA)
-
-
-# --------------------------------------------------------------------------
-# narrow path: whole-document kernel (zero-shuffle extraction)
-# --------------------------------------------------------------------------
-_NARROW_SCHEMA = (
-    "doc_id string, order int, kind string, text string, media_ref string, "
-    "page_num int, error string, n_spans_in long, partition_id int"
-)
-
-
-def _extract_doc_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """Whole-document extraction: one input row (doc_id, spans[]) → ordered
-    span rows, order computed in-kernel (the oracle logic itself — equality
-    with the single-process oracle holds by construction).
-
-    Emits one sentinel row per document (kind='__doc') carrying lineage:
-    error, n_spans_in, n_blocks_out (in `order`). Failed docs emit ONLY the
-    sentinel (no partial output).
+def _extract_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    """One input row (doc_id, part, n_spans_in, spans[]) → its blocks in
+    reading order (``order`` 0-based within the row), then one sentinel row
+    (kind='__doc') carrying lineage: the error and the block count (in
+    `order`). The span traversal is the oracle's
+    (kernels.extract.extract_document_oracle), with per-span errors
+    promoted to row failure: a failing row emits ONLY its sentinel — the
+    reference's DocumentLoadError taxonomy (src/ingestion/document.py:191-203)
+    as dead-letter data instead of a failed task.
     """
     import pandas as pd
     from pyspark import TaskContext
 
-    from .kernels.extract import extract_span
-
     pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    cols = ("doc_id", "order", "kind", "text", "media_ref", "page_num",
+    cols = ("doc_id", "part", "order", "kind", "text", "media_ref", "page_num",
             "error", "n_spans_in", "partition_id")
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in cols}
 
-        def emit(doc_id, order, kind, text, ref, page, err, n_in):
+        def emit(doc_id, part, order, kind, text, ref, page, err, n_in):
             out["doc_id"].append(doc_id)
+            out["part"].append(part)
             out["order"].append(order)
             out["kind"].append(kind)
             out["text"].append(text)
@@ -212,13 +98,11 @@ def _extract_doc_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataF
             out["n_spans_in"].append(n_in)
             out["partition_id"].append(pid)
 
-        for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-            span_list = list(spans) if spans is not None else []
-            n_in = len(span_list)
-            # same traversal as kernels.extract.extract_document_oracle,
-            # with per-span errors promoted to doc failure (dead letter)
+        for doc_id, part, n_in, spans in zip(
+            pdf["doc_id"], pdf["part"], pdf["n_spans_in"], pdf["spans"]
+        ):
             indexed = sorted(
-                enumerate(span_list),
+                enumerate(list(spans) if spans is not None else []),
                 key=lambda p: ((p[1].get("offset") or 0), p[0]),
             )
             blocks: list = []
@@ -238,11 +122,24 @@ def _extract_doc_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataF
                 err = traceback.format_exc(limit=2)
             if err is None:
                 for order, (kind, text, ref, page) in enumerate(blocks):
-                    emit(doc_id, order, kind, text, ref, page, None, n_in)
-                emit(doc_id, len(blocks), "__doc", None, None, None, None, n_in)
+                    emit(doc_id, part, order, kind, text, ref, page, None, n_in)
+                emit(doc_id, part, len(blocks), "__doc", None, None, None, None, n_in)
             else:
-                emit(doc_id, 0, "__doc", None, None, None, err, n_in)
+                emit(doc_id, part, 0, "__doc", None, None, None, err, n_in)
         yield pd.DataFrame(out)
+
+
+def _document_rows(docs: DataFrame) -> DataFrame:
+    """(doc_id, spans[]) → kernel input rows, one per document (part 0)."""
+    return docs.select(
+        "doc_id",
+        F.lit(0).alias("part"),
+        # greatest(...,0): size(NULL) is NULL (or legacy -1) — report 0
+        F.greatest(F.coalesce(F.size("spans"), F.lit(0)), F.lit(0)).alias(
+            "n_spans_in"
+        ),
+        "spans",
+    )
 
 
 def extract_documents_narrow(docs: DataFrame) -> DataFrame:
@@ -251,38 +148,83 @@ def extract_documents_narrow(docs: DataFrame) -> DataFrame:
     payload bytes (spread path) is pure overhead unless the input files are
     few/skewed. A giant document is one task's straggler here — switch to
     the spread path when that dominates (SURVEY.md §7.3 #3)."""
-    return docs.mapInPandas(_extract_doc_kernel, schema=_NARROW_SCHEMA)
+    return _document_rows(docs).mapInPandas(_extract_kernel, schema=_KERNEL_SCHEMA)
 
 
 # --------------------------------------------------------------------------
-# stage 3 (spread path): total per-document span order (window)
+# spread front end: reading-order slices of one document
 # --------------------------------------------------------------------------
-def order_spans(blocks: DataFrame, drop_failed_docs: bool = True) -> DataFrame:
-    """Blocks → the FIXTURES.md F2 output: 0-based total order per doc.
+def extract_documents_spread(
+    docs: DataFrame, repartition_to: int | None = None
+) -> DataFrame:
+    """The spread front end: the kernel over one row per slice of at most
+    SPREAD_SLICE_SPANS spans in reading order, ``part`` = slice rank.
 
-    Never relies on batch arrival order (SURVEY.md §7.3 #4): the order is
-    recomputed from (offset, span_idx, block_seq) after the shuffle.
-
-    Failed-document exclusion is a SECOND window over the SAME partitioning
-    (doc_id) — one exchange serves both — NOT an anti-join against a
-    `blocks.filter(error)` branch: a self-referencing join re-executes the
-    whole extraction kernel per branch (measured 2× kernel cost per job).
+    The sort key (offset, array index) is the kernel's own, so slice p
+    holds exactly the spans that precede slice p+1's in the document, and
+    per-slice kernel output ordered by (part, order) is the whole-document
+    order. A null/empty spans array stays one (empty) slice so its
+    document still reaches lineage. ``repartition_to``: round-robin the
+    slices to N partitions before the kernel (see run_extraction).
     """
-    doc_w = Window.partitionBy("doc_id")
-    order_w = doc_w.orderBy("offset", "span_idx", "block_seq")
-    if drop_failed_docs:
-        blocks = blocks.withColumn(
-            "_doc_failed",
-            F.max(F.col("error").isNotNull().cast("int")).over(doc_w),
-        ).filter(F.col("_doc_failed") == 0)
-    real = blocks.filter(~F.col("kind").isin("error", "empty"))
-    return real.select(
-        "doc_id",
-        (F.row_number().over(order_w) - 1).alias("order"),
-        "kind",
-        "text",
-        "media_ref",
-        "page_num",
+    n = SPREAD_SLICE_SPANS
+    ranked = F.sort_array(
+        F.transform(
+            "spans",
+            lambda s, i: F.struct(
+                F.coalesce(s["offset"], F.lit(0)).alias("o"),
+                i.alias("i"),
+                s.alias("s"),
+            ),
+        )
+    )
+    n_slices = F.greatest(F.ceil(F.col("n_spans_in") / n), F.lit(1))
+    slices = F.transform(
+        F.sequence(F.lit(0), (n_slices - 1).cast("int")),
+        lambda k: F.transform(
+            F.slice("_ranked", k * n + 1, F.lit(n)), lambda x: x["s"]
+        ),
+    )
+    rows = (
+        _document_rows(docs)
+        .select("doc_id", "n_spans_in", ranked.alias("_ranked"))
+        .select("doc_id", "n_spans_in", F.posexplode(slices).alias("part", "spans"))
+    )
+    if repartition_to:
+        rows = rows.repartition(repartition_to)
+    return rows.mapInPandas(_extract_kernel, schema=_KERNEL_SCHEMA)
+
+
+def order_spans(raw: DataFrame) -> DataFrame:
+    """Spread kernel output → the FIXTURES.md F2 output: 0-based total
+    order per doc, failed documents dropped.
+
+    One window (one doc_id exchange) does both: rows sort by
+    (part, order), where each slice's sentinel sorts last in its slice, so
+    a block's document order is its row number minus the sentinels of
+    earlier slices (= part). Failed-document exclusion is a window max over
+    the same spec — NOT an anti-join against an error branch: a
+    self-referencing join re-executes the whole kernel per branch
+    (measured 2× kernel cost per job).
+    """
+    w = Window.partitionBy("doc_id").orderBy("part", "order")
+    return (
+        raw.select(
+            "*",
+            (F.row_number().over(w) - 1 - F.col("part")).alias("_order"),
+            F.max(F.col("error").isNotNull().cast("int"))
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+            .alias("_failed"),
+        )
+        .filter((F.col("_failed") == 0) & (F.col("kind") != "__doc"))
+        .select(
+            "doc_id",
+            F.col("_order").alias("order"),
+            "kind",
+            "text",
+            "media_ref",
+            "page_num",
+        )
     )
 
 
@@ -411,28 +353,6 @@ def _run_ts_col(run_ts) -> "F.Column":
     return F.to_timestamp(F.lit(ts.strftime("%Y-%m-%d %H:%M:%S.%f")))
 
 
-def lineage_from_blocks(blocks: DataFrame, run_id: str, run_ts=None) -> DataFrame:
-    """Per-document checkpoint/metrics rows (FIXTURES.md F4)."""
-    return blocks.groupBy("doc_id").agg(
-        F.lit(run_id).alias("run_id"),
-        F.min("partition_id").alias("partition_id"),
-        F.when(F.count(F.col("error")) > 0, "failed")
-        .otherwise("processed")
-        .alias("status"),
-        F.first("error", ignorenulls=True).alias("error"),
-        F.first("n_spans_in").cast("long").alias("n_spans_in"),
-        # failed docs report 0 blocks (they emit no output rows) — matches
-        # the narrow kernel's sentinel, not the count of sibling-span blocks
-        F.when(
-            F.count(F.col("error")) > 0, F.lit(0).cast("long")
-        )
-        .otherwise(F.sum((~F.col("kind").isin("error", "empty")).cast("long")))
-        .alias("n_blocks_out"),
-        _run_ts_col(run_ts).alias("ingested_at"),
-    ).select("run_id", "partition_id", "doc_id", "status", "error",
-             "n_spans_in", "n_blocks_out", "ingested_at")
-
-
 def resume_filter(
     docs: DataFrame, lineage: DataFrame | None, modified_col: str | None = None
 ) -> DataFrame:
@@ -472,19 +392,25 @@ def run_extraction(
     persist_blocks: bool = False,
     mode: str = "narrow",
     run_ts=None,
-    salt: str = "roundrobin",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full pipeline → (extracted_spans, chunks, lineage).
 
-    Modes (both produce IDENTICAL output — tested):
-    * ``narrow`` (default): whole-document kernel, ordering in-kernel,
-      ZERO shuffles for extraction+lineage. Extraction is embarrassingly
-      parallel per document; at 100 TB the shuffle the spread path pays on
-      every raw payload byte is the bottleneck, so narrow is the default.
-    * ``spread``: explode(spans) → optional round-robin ``repartition_to``
-      → per-span kernel → window re-ordering. Use when giant documents
-      (10^2-10^3× median) would straggle a narrow task — the north-rule
-      skew defuse: one doc's spans spread over many tasks.
+    Modes (one kernel; both produce IDENTICAL output — tested):
+    * ``narrow`` (default): one kernel row per document, ordering
+      in-kernel, ZERO shuffles for extraction+lineage. Extraction is
+      embarrassingly parallel per document; at 100 TB the shuffle the
+      spread path pays on every raw payload byte is the bottleneck, so
+      narrow is the default.
+    * ``spread``: one kernel row per reading-order slice of
+      SPREAD_SLICE_SPANS spans → window re-ordering. Use when giant
+      documents (10^2-10^3× median) would straggle a narrow task — the
+      north-rule skew defuse: one doc's slices spread over many tasks.
+
+    ``repartition_to``: round-robin the kernel rows to N partitions first
+    (in spread mode this is what spreads a giant's slices; in narrow mode
+    it spreads whole documents). None: no shuffle — scan splits provide
+    the parallelism (a many-file table at 100 TB is already well-split;
+    shuffling every raw payload byte would dominate the job).
 
     ``persist_blocks=True`` caches the kernel output (MEMORY_AND_DISK) —
     use it when materializing more than one of the three outputs in the
@@ -505,41 +431,48 @@ def run_extraction(
         mode = choose_extraction_mode(todo)
     if mode == "narrow":
         if repartition_to:
-            # honor the knob in narrow mode too: round-robin whole-doc rows
-            # (spreads docs, not spans — use mode='spread' to split giants)
+            # round-robin whole-doc rows (spreads docs, not spans — use
+            # mode='spread' to split giants)
             todo = todo.repartition(repartition_to)
         raw = extract_documents_narrow(todo)
-        if persist_blocks:
-            from pyspark import StorageLevel
+    elif mode == "spread":
+        raw = extract_documents_spread(todo, repartition_to)
+    else:
+        raise ValueError(f"unknown mode {mode!r} (narrow|spread|auto)")
+    if persist_blocks:
+        from pyspark import StorageLevel
 
-            raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    sentinels = raw.filter(F.col("kind") == "__doc")
+    if mode == "narrow":
         extracted = raw.filter(F.col("kind") != "__doc").select(
             "doc_id", "order", "kind", "text", "media_ref", "page_num"
         )
-        lineage = raw.filter(F.col("kind") == "__doc").select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "doc_id",
-            F.when(F.col("error").isNull(), "processed")
-            .otherwise("failed")
-            .alias("status"),
-            "error",
-            "n_spans_in",
-            F.col("order").cast("long").alias("n_blocks_out"),
-            _run_ts_col(run_ts).alias("ingested_at"),
-        )
-    elif mode == "spread":
-        blocks = extract_blocks(
-            explode_spans(todo), repartition_to=repartition_to, salt=salt
-        )
-        if persist_blocks:
-            from pyspark import StorageLevel
-
-            blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-        extracted = order_spans(blocks)
-        lineage = lineage_from_blocks(blocks, run_id, run_ts=run_ts)
     else:
-        raise ValueError(f"unknown mode {mode!r} (narrow|spread|auto)")
+        extracted = order_spans(raw)
+        # one row per document: the error of the first failing slice in
+        # reading order, the summed block count
+        sentinels = sentinels.groupBy("doc_id").agg(
+            F.min("partition_id").alias("partition_id"),
+            F.min_by("error", F.when(F.col("error").isNotNull(), F.col("part")))
+            .alias("error"),
+            F.max("n_spans_in").alias("n_spans_in"),
+            F.sum("order").alias("order"),
+        )
+    lineage = sentinels.select(
+        F.lit(run_id).alias("run_id"),
+        "partition_id",
+        "doc_id",
+        F.when(F.col("error").isNull(), "processed").otherwise("failed").alias("status"),
+        "error",
+        "n_spans_in",
+        # failed docs report 0 blocks: they emit no output rows
+        F.when(F.col("error").isNull(), F.col("order"))
+        .otherwise(0)
+        .cast("long")
+        .alias("n_blocks_out"),
+        _run_ts_col(run_ts).alias("ingested_at"),
+    )
     chunks = chunk_spans(extracted)
     return extracted, chunks, lineage
 

@@ -14,8 +14,8 @@ Semantics mirrored (must stay in lockstep with the driver queries):
   (sources/corpus.py:35-47)
 - extraction + ordering: kernels.extract.extract_span over spans sorted by
   (offset, original index); any error block fails the WHOLE document, which
-  is then dropped (pipeline.order_spans drop_failed_docs=True); order is the
-  0-based rank among real (non-error, non-empty) blocks
+  is then dropped (pipeline._extract_kernel emits only its lineage
+  sentinel); order is the 0-based rank among real (non-error) blocks
 - chunks: kernels.chunker.ChunkPacker (frozen spec v2) + the md5 chunk id
 - metadata: pipeline.doc_metadata joins (doc_type precedence, language of
   first chunk, chunk/token counts, max page), 'en'/0 coalesces included
@@ -60,7 +60,7 @@ def corpus_key(docs: list[tuple[str, str]]) -> str:
 def extract_doc(spans: list[dict]) -> list[tuple[str, str, str | None, int | None]] | None:
     """Driver-query extraction of one document: ordered real blocks, or
     None when the document FAILS (any error block → whole doc dropped,
-    pipeline.order_spans drop_failed_docs)."""
+    as pipeline._extract_kernel does)."""
     indexed = sorted(enumerate(spans), key=lambda p: (p[1].get("offset") or 0, p[0]))
     blocks: list[tuple[str, str, str | None, int | None]] = []
     for _, s in indexed:

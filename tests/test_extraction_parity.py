@@ -144,8 +144,8 @@ def test_chunk_packer_greedy_and_heading_merge():
 
 def test_narrow_equals_spread(spark, corpus_rows):
     """Both execution modes produce identical (doc_id, order, kind, text,
-    media_ref) sequences — the zero-shuffle narrow kernel and the
-    explode→window spread path are interchangeable."""
+    media_ref) sequences — the zero-shuffle narrow path and the
+    slice→window spread path are interchangeable."""
     from docling_rag_spark.pipeline import run_extraction
 
     docs = spark.createDataFrame(
@@ -180,10 +180,20 @@ def test_narrow_lineage_matches_spread(spark, corpus_rows):
 
 
 def test_lineage_parity_with_failures_and_nulls(spark):
-    """Narrow and spread lineage agree for failed docs (n_blocks_out=0) and
-    null spans arrays (n_spans_in=0) — the previously-unexercised cases."""
-    from docling_rag_spark.pipeline import run_extraction
+    """Narrow and spread lineage agree on status, error and counts for
+    failed docs (n_blocks_out=0), null spans arrays (n_spans_in=0), and a
+    doc whose two failing spans fall in different spread slices after a
+    clean one (spread keeps the first failing slice's error and reports 0
+    blocks, not the clean slice's count)."""
+    from docling_rag_spark.pipeline import SPREAD_SLICE_SPANS, run_extraction
 
+    n = SPREAD_SLICE_SPANS
+    twofail = [
+        {"kind": "pdf", "text": "NOT A MINIPDF", "media_ref": None, "offset": o}
+        if o in (n + 5, 2 * n + 5)
+        else {"kind": "text", "text": f"filler {o}", "media_ref": None, "offset": o}
+        for o in reversed(range(3 * n))
+    ]
     rows = [
         ("okdoc", [{"kind": "text", "text": "fine text here", "media_ref": None, "offset": 0}]),
         ("faildoc", [
@@ -191,44 +201,22 @@ def test_lineage_parity_with_failures_and_nulls(spark):
             {"kind": "pdf", "text": "NOT A MINIPDF", "media_ref": None, "offset": 10},
             {"kind": "text", "text": "another good one", "media_ref": None, "offset": 20},
         ]),
+        ("twofail", twofail),
         ("nullspans", None),
         ("emptyspans", []),
     ]
     docs = spark.createDataFrame(rows, schema=DOCUMENTS_SPANS_SCHEMA)
 
     def lin(mode):
-        _, _, lineage = run_extraction(docs, run_id="x", mode=mode)
+        _, _, lineage = run_extraction(docs, run_id="x", mode=mode, repartition_to=4)
         return {
-            r["doc_id"]: (r["status"], r["n_spans_in"], r["n_blocks_out"])
+            r["doc_id"]: (r["status"], r["error"], r["n_spans_in"], r["n_blocks_out"])
             for r in lineage.collect()
         }
 
-    n, s = lin("narrow"), lin("spread")
-    assert n == s, (n, s)
-    assert n["faildoc"] == ("failed", 3, 0)
-    assert n["nullspans"] == ("processed", 0, 0)
-    assert n["emptyspans"] == ("processed", 0, 0)
-
-
-def test_keyed_salt_spread_equals_narrow(spark, corpus_rows):
-    """The keyed-salt spread variant (hash of (doc_id, span_idx % buckets) —
-    giant docs fan out over <= SALT_BUCKETS tasks, normal docs stay
-    co-located) produces byte-identical output to narrow."""
-    from docling_rag_spark.pipeline import run_extraction
-
-    docs = spark.createDataFrame(
-        [(d, s) for d, s in corpus_rows[:30]], schema=DOCUMENTS_SPANS_SCHEMA
-    )
-
-    def seqs(**kw):
-        ex, _, _ = run_extraction(docs, run_id="salt", **kw)
-        out = {}
-        for r in ex.collect():
-            out.setdefault(r["doc_id"], []).append(
-                (r["order"], r["kind"], r["text"], r["media_ref"])
-            )
-        return {k: sorted(v) for k, v in out.items()}
-
-    assert seqs(mode="narrow") == seqs(
-        mode="spread", repartition_to=8, salt="keyed"
-    )
+    narrow, spread = lin("narrow"), lin("spread")
+    assert narrow == spread, (narrow, spread)
+    assert narrow["faildoc"] == ("failed", "invalid minipdf payload", 3, 0)
+    assert narrow["twofail"] == ("failed", "invalid minipdf payload", 3 * n, 0)
+    assert narrow["nullspans"] == ("processed", None, 0, 0)
+    assert narrow["emptyspans"] == ("processed", None, 0, 0)

@@ -67,17 +67,20 @@ def test_giant_doc_skew_spreads_across_partitions(spark):
     docs = _mk_docs(spark, rows)
     n_spans = docs.select(F.size("spans")).head()[0]
     assert n_spans > 200  # it IS a giant
-    extracted, _, lineage = run_extraction(docs, run_id="skew", repartition_to=8)
-    # one doc, hundreds of spans: the kernel must have run in >1 partition
-    # (round-robin explode defuses the straggler)
-    from docling_rag_spark.pipeline import explode_spans, extract_blocks
+    extracted, _, lineage = run_extraction(
+        docs, run_id="skew", mode="spread", repartition_to=8
+    )
+    # one doc, hundreds of spans: the spread front end that run passed
+    # through must run the kernel in >1 partition
+    from docling_rag_spark.pipeline import extract_documents_spread
 
-    blocks = extract_blocks(explode_spans(docs), repartition_to=8)
-    nparts = blocks.select("partition_id").distinct().count()
+    raw = extract_documents_spread(docs, repartition_to=8)
+    nparts = raw.select("partition_id").distinct().count()
     assert nparts > 1
     # and the output is still a correct dense order
     orders = [r["order"] for r in extracted.select("order").collect()]
     assert sorted(orders) == list(range(len(orders)))
+    assert lineage.head()["n_blocks_out"] == len(orders)
 
 
 def test_unordered_span_arrays_are_reordered(spark):

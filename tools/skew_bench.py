@@ -3,8 +3,8 @@
 Builds a deliberately skewed corpus — a few documents carry ~10^4× the
 median span count (FIXTURES.md skew knob / SURVEY.md §7.3 #3) — and times
 `run_extraction` in both modes at the same parallelism. Narrow pins each
-giant to one task (stragglers); spread explodes spans and round-robins them
-across all tasks before the kernel. Appends the result table to BENCH.md.
+giant to one task (stragglers); spread cuts documents into reading-order
+slices and round-robins them across all tasks before the kernel. Appends the result table to BENCH.md.
 
 Usage: python tools/skew_bench.py [n_giants] [giant_spans] [n_normal]
 """
@@ -106,7 +106,7 @@ Corpus: {n_giants} giant docs × {giant_spans} spans (all in ONE input file)
 | mode | wall median (s) | runs |
 |---|---|---|
 | narrow (doc-per-task) | {nmed} | {nwalls} |
-| spread (explode → round-robin repartition 64 → per-span kernel → window re-order) | {smed} | {swalls} |
+| spread (64-span slices → round-robin repartition 64 → kernel → window re-order) | {smed} | {swalls} |
 
 Narrow pins each giant to one task — the stragglers set the wall clock.
 Spread pays one shuffle of the payload bytes but spreads the giants' spans
