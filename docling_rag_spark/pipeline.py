@@ -22,6 +22,14 @@ SPREAD (giant-document skew defuse — the north-rule salting path):
     (part, order) → same chunk assembly; lineage = groupBy over the
     slice sentinels
 
+METADATA (doc_metadata, one shuffle):
+    union by name of (doc_id, doc_type) from the input scan (span kinds
+    only — nested-schema pruning), (doc_id, first-chunk text, n_tokens)
+    from the chunks and (doc_id, page_num) from the extracted spans
+      → one groupBy(doc_id) rollup → language of the first chunk
+    With persist_blocks=True both the kernel output and the chunks are
+    cached, so no Python kernel re-runs for it.
+
 Scale notes (100 TB):
 - Extraction is embarrassingly parallel per document → narrow is default;
   spread's repartition + ordering window shuffle every payload byte and
@@ -39,6 +47,7 @@ import traceback
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -313,28 +322,50 @@ def chunk_spans(extracted: DataFrame, max_tokens: int = MAX_TOKENS) -> DataFrame
 def doc_metadata(docs: DataFrame, extracted: DataFrame, chunks: DataFrame) -> DataFrame:
     """doc_type from input span kinds (pdf > html > txt precedence — the
     analog of file-extension doc_type, document.py:210); language from the
-    first 500 chars of the first chunk (document.py:212-218)."""
-    kinds = docs.select(
+    first 500 chars of the first chunk (document.py:212-218).
+
+    One shuffle: the three inputs are unioned by name and rolled up in a
+    single groupBy(doc_id), so a keyed sink's dropDuplicates(doc_id) reuses
+    that partitioning. ``array_contains`` over ``spans.kind`` (not a
+    lambda) lets nested-schema pruning read only the span kinds. Rows keep
+    the ``docs`` document set (doc_type is never null there); a null spans
+    array gives a null doc_type test and falls through to 'txt'.
+    """
+    kinds = F.col("spans.kind")
+    rows = docs.select(
         "doc_id",
-        F.when(F.exists("spans", lambda s: s["kind"] == "pdf"), "pdf")
-        .when(F.exists("spans", lambda s: s["kind"] == "html"), "html")
+        F.when(F.array_contains(kinds, "pdf"), "pdf")
+        .when(F.array_contains(kinds, "html"), "html")
         .otherwise("txt")
         .alias("doc_type"),
-    )
-    lang = (
-        chunks.filter(F.col("chunk_index") == 0)
-        .select("doc_id", detect_language_col(F.col("text")).alias("language"))
-    )
-    counts = chunks.groupBy("doc_id").agg(
-        F.count("*").alias("num_chunks"), F.sum("n_tokens").alias("num_tokens")
-    )
-    pages = extracted.groupBy("doc_id").agg(F.max("page_num").alias("num_pages"))
+    ).unionByName(
+        chunks.select(
+            "doc_id",
+            F.when(F.col("chunk_index") == 0, F.col("text")).alias("first_chunk"),
+            "n_tokens",
+        ),
+        allowMissingColumns=True,
+    ).unionByName(extracted.select("doc_id", "page_num"), allowMissingColumns=True)
     return (
-        kinds.join(lang, "doc_id", "left")
-        .join(counts, "doc_id", "left")
-        .join(pages, "doc_id", "left")
-        .withColumn("language", F.coalesce("language", F.lit("en")))
-        .withColumn("num_chunks", F.coalesce("num_chunks", F.lit(0)))
+        rows.groupBy("doc_id")
+        .agg(
+            F.max("doc_type").alias("doc_type"),
+            F.max("first_chunk").alias("first_chunk"),
+            F.count("n_tokens").alias("num_chunks"),
+            F.sum("n_tokens").alias("num_tokens"),
+            F.max("page_num").alias("num_pages"),
+        )
+        .filter(F.col("doc_type").isNotNull())
+        .select(
+            "doc_id",
+            "doc_type",
+            F.coalesce(detect_language_col(F.col("first_chunk")), F.lit("en")).alias(
+                "language"
+            ),
+            "num_chunks",
+            "num_tokens",
+            "num_pages",
+        )
     )
 
 
@@ -412,10 +443,14 @@ def run_extraction(
     the parallelism (a many-file table at 100 TB is already well-split;
     shuffling every raw payload byte would dominate the job).
 
-    ``persist_blocks=True`` caches the kernel output (MEMORY_AND_DISK) —
-    use it when materializing more than one of the three outputs in the
-    same job batch (e.g. the streaming sink), since extracted/lineage would
-    otherwise each re-run the extraction kernel.
+    ``persist_blocks=True`` caches (MEMORY_AND_DISK) the kernel output and
+    the chunks — use it when materializing more than one of the outputs in
+    the same job batch (e.g. extract_job, the streaming sink): extracted and
+    lineage read the cached kernel output instead of each re-running the
+    extraction kernel, and doc_metadata reads both caches, so the chunk
+    exchange, sort and packer run once (in whichever sink comes first).
+    ``release_extraction(lineage)`` drops both caches when the batch is
+    written.
 
     * ``auto``: probe the per-doc span-count distribution and pick for you
       (choose_extraction_mode) — spread only when a giant-document
@@ -440,8 +475,6 @@ def run_extraction(
     else:
         raise ValueError(f"unknown mode {mode!r} (narrow|spread|auto)")
     if persist_blocks:
-        from pyspark import StorageLevel
-
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
     sentinels = raw.filter(F.col("kind") == "__doc")
     if mode == "narrow":
@@ -474,7 +507,19 @@ def run_extraction(
         _run_ts_col(run_ts).alias("ingested_at"),
     )
     chunks = chunk_spans(extracted)
+    if persist_blocks:
+        chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
+        lineage._cached = (raw, chunks)  # what release_extraction unpersists
     return extracted, chunks, lineage
+
+
+def release_extraction(lineage: DataFrame) -> None:
+    """Unpersist exactly the frames ``run_extraction(persist_blocks=True)``
+    cached for the batch whose ``lineage`` frame it returned (the kernel
+    output and the chunks) — for a caller that runs many batches in one
+    session, so they do not accumulate. A no-op for an uncached run."""
+    for df in getattr(lineage, "_cached", ()):
+        df.unpersist()
 
 
 # auto-mode decision thresholds: spread pays a shuffle on every payload

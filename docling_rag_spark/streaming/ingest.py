@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import run_extraction
+from ..pipeline import release_extraction, run_extraction
 from ..schemas import DOCUMENTS_SPANS_SCHEMA
 
 
@@ -66,9 +66,13 @@ def stream_ingest(
         )
         # idempotent (keyed anti-join) appends — a foreachBatch replay after
         # a mid-batch failure must not duplicate already-written rows
-        idempotent_append(spark, extracted, spans_dir, key=["doc_id", "order"])
-        idempotent_append(spark, chunks, chunks_dir, key="id")
-        idempotent_append(spark, lineage, lineage_dir, key=["doc_id", "status"])
+        try:
+            idempotent_append(spark, extracted, spans_dir, key=["doc_id", "order"])
+            idempotent_append(spark, chunks, chunks_dir, key="id")
+            idempotent_append(spark, lineage, lineage_dir, key=["doc_id", "status"])
+        finally:
+            # a long stream must not keep every micro-batch's caches
+            release_extraction(lineage)
 
     q = (
         stream.writeStream.foreachBatch(process_batch)

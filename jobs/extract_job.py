@@ -3,7 +3,12 @@ jobs/extract_job.py --input <table-or-path> --output <dir> [--resume] ...
 
 The north-rule deployment shape (BASELINE.json:14): the same code that runs
 in tests/bench ships unchanged to a cluster; parallelism and memory come
-from spark-submit --conf / --num-executors, not from code.
+from spark-submit --conf / --num-executors, not from code. This job builds
+its session from the submit conf (it does not call session.get_spark), so
+ship get_spark's settings with it, including
+``--conf spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``:
+run_extraction(persist_blocks=True) caches the chunks, and without it AQE
+cannot coalesce the cached chunk exchange's partitions.
 
 Outputs under --output:
   extracted_spans/   ordered (doc_id, order, kind, text, media_ref, page_num)

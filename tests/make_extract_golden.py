@@ -17,8 +17,9 @@ Semantics mirrored (must stay in lockstep with the driver queries):
   is then dropped (pipeline._extract_kernel emits only its lineage
   sentinel); order is the 0-based rank among real (non-error) blocks
 - chunks: kernels.chunker.ChunkPacker (frozen spec v2) + the md5 chunk id
-- metadata: pipeline.doc_metadata joins (doc_type precedence, language of
-  first chunk, chunk/token counts, max page), 'en'/0 coalesces included
+- metadata: pipeline.doc_metadata's per-document rollup (doc_type
+  precedence, language of first chunk, chunk/token counts, max page),
+  'en'/0 coalesces included
 
 Run manually ONLY on a deliberate spec or datagen change:
 ``python tests/make_extract_golden.py``. tests/test_golden_spec.py compares
@@ -75,6 +76,31 @@ def extract_doc(spans: list[dict]) -> list[tuple[str, str, str | None, int | Non
     return blocks
 
 
+def process_doc(spans: list[dict] | None) -> tuple[list | None, list[dict], dict]:
+    """One document's (blocks or None when it fails, chunks, metadata row
+    without doc_id) — the per-document recipe of every golden table. A null
+    spans array is an empty document (doc_type 'txt')."""
+    spans = spans or []
+    in_kinds = {s["kind"] for s in spans}
+    doc_type = "pdf" if "pdf" in in_kinds else ("html" if "html" in in_kinds else "txt")
+    blocks = extract_doc(spans)
+    chunks: list[dict] = []
+    if blocks is not None:
+        packer = ChunkPacker()
+        for kind, t, _ref, page in blocks:
+            packer.add(kind, t, page)
+        chunks = packer.finish()
+    pages = [p for (_k, _t, _r, p) in (blocks or []) if p is not None]
+    meta = {
+        "doc_type": doc_type,
+        "language": detect_language(chunks[0]["text"]) if chunks else "en",
+        "num_chunks": len(chunks),
+        "num_tokens": sum(c["n_tokens"] for c in chunks) if chunks else None,
+        "num_pages": max(pages) if pages else None,
+    }
+    return blocks, chunks, meta
+
+
 def golden_for_sf(sf_dir: str) -> dict[str, list[dict]]:
     import duckdb
 
@@ -90,40 +116,26 @@ def golden_for_sf(sf_dir: str) -> dict[str, list[dict]]:
     for doc_id, text in docs:
         doc_id = str(doc_id)  # the Spark corpus stringifies (corpus.py:41)
         spans = build_spans(doc_id, text or "")
-        in_kinds = {s["kind"] for s in spans}
-        doc_type = "pdf" if "pdf" in in_kinds else ("html" if "html" in in_kinds else "txt")
-        blocks = extract_doc(spans)
-        chunks: list[dict] = []
-        if blocks is not None:
-            packer = ChunkPacker()
-            for order, (kind, t, ref, page) in enumerate(blocks):
-                span_rows.append(
-                    {"corpus_key": key, "doc_id": doc_id, "order": order,
-                     "kind": kind, "text": t, "media_ref": ref, "page_num": page}
-                )
-                packer.add(kind, t, page)
-            chunks = packer.finish()
-            for c in chunks:
-                chunk_rows.append(
-                    {"corpus_key": key, "doc_id": doc_id,
-                     "chunk_index": c["chunk_index"], "text": c["text"],
-                     "page_num": c["page_num"], "n_tokens": c["n_tokens"],
-                     "id": chunk_id(doc_id, c["chunk_index"], c["text"])}
-                )
+        blocks, chunks, meta = process_doc(spans)
+        for order, (kind, t, ref, page) in enumerate(blocks or []):
+            span_rows.append(
+                {"corpus_key": key, "doc_id": doc_id, "order": order,
+                 "kind": kind, "text": t, "media_ref": ref, "page_num": page}
+            )
+        for c in chunks:
+            chunk_rows.append(
+                {"corpus_key": key, "doc_id": doc_id,
+                 "chunk_index": c["chunk_index"], "text": c["text"],
+                 "page_num": c["page_num"], "n_tokens": c["n_tokens"],
+                 "id": chunk_id(doc_id, c["chunk_index"], c["text"])}
+            )
         lineage_rows.append(
             {"corpus_key": key, "doc_id": doc_id,
              "status": "failed" if blocks is None else "processed",
              "n_spans_in": len(spans),
              "n_blocks_out": 0 if blocks is None else len(blocks)}
         )
-        pages = [p for (_k, _t, _r, p) in (blocks or []) if p is not None]
-        meta_rows.append(
-            {"corpus_key": key, "doc_id": doc_id, "doc_type": doc_type,
-             "language": detect_language(chunks[0]["text"]) if chunks else "en",
-             "num_chunks": len(chunks),
-             "num_tokens": sum(c["n_tokens"] for c in chunks) if chunks else None,
-             "num_pages": max(pages) if pages else None}
-        )
+        meta_rows.append({"corpus_key": key, "doc_id": doc_id, **meta})
     return {"spans": span_rows, "chunks": chunk_rows, "meta": meta_rows,
             "lineage": lineage_rows}
 

@@ -589,28 +589,19 @@ def test_ivf_corrupt_artifact_fails_loud(spark, tmp_path, monkeypatch):
 
     from docling_rag_spark.operators import similarity as S
 
-    # ensure the artifact exists, then corrupt its centroids part in place
-    # (restored afterwards). Resolve the CURRENT artifact dir via the same
-    # helper _ivf_index uses — stale dirs from older module hashes linger.
+    # build a private copy of the artifact under tmp_path, then corrupt its
+    # centroids part — the shared artifact under data/ is never touched
+    out = str(tmp_path / "ivf_test_sf0.001")
+    monkeypatch.setattr(S, "_ivf_artifact_dir", lambda sf_dir: out)
     assigned, cents = S._ivf_index(spark, "/root/testdata/sf0.001")
     assert assigned.count() > 0
-    roots = glob.glob(
-        os.path.join(S._ivf_artifact_dir("/root/testdata/sf0.001"),
-                     "centroids", "*.parquet")
-    )
+    roots = glob.glob(os.path.join(out, "centroids", "*.parquet"))
     assert roots, "ivf artifact not found"
-    victim = roots[0]
-    backup = victim + ".bak"
-    os.rename(victim, backup)
-    try:
-        with open(victim, "w") as f:
-            f.write("corrupt, not parquet")
-        with pytest.raises(Exception) as ei:
-            S._ivf_index(spark, "/root/testdata/sf0.001")[1]
-        assert not isinstance(ei.value, (OSError,))
-    finally:
-        os.remove(victim)
-        os.rename(backup, victim)
+    with open(roots[0], "w") as f:
+        f.write("corrupt, not parquet")
+    with pytest.raises(Exception) as ei:
+        S._ivf_index(spark, "/root/testdata/sf0.001")[1]
+    assert not isinstance(ei.value, (OSError,))
 
 
 def test_ivf_readonly_valid_artifact_is_served_not_retrained(spark, monkeypatch):

@@ -42,6 +42,20 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     assert chunks2.count() == chunks2.select("id").distinct().count()
 
 
+def test_stream_ingest_releases_batch_caches(spark, tmp_path):
+    """Each micro-batch unpersists what its run_extraction cached: a long
+    stream does not accumulate persisted RDDs."""
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    _write_batch(spark, inp, ["r0", "r1"])
+    _write_batch(spark, inp, ["r2", "r3"])
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    stream_ingest(spark, inp, out, max_files_per_trigger=1)
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    assert lineage.select("run_id").distinct().count() == 2  # two micro-batches
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) <= before
+
+
 def test_idempotent_append(spark, tmp_path):
     path = str(tmp_path / "sink")
     df = spark.createDataFrame(
