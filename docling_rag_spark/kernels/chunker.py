@@ -1,11 +1,14 @@
-"""Single-process chunker mirror of pipeline.chunk_spans (frozen spec v2).
+"""Single-process chunker mirror of the pipeline's chunks (frozen spec v2).
 
 Reference semantics: HybridChunker walks the doc tree in reading order with
 heading context, packs items into <=512-token chunks, and merges undersized
 *adjacent* peers sharing headings (reference src/ingestion/chunker.py:16-27,
 max_tokens src/config.py:34). Re-specified here as a deterministic
-single-pass greedy packer; the Spark kernel (pipeline._chunk_kernel) and
-this oracle share :class:`ChunkPacker`, and tests assert equality.
+single-pass greedy packer. Both Spark kernels share :class:`ChunkPacker`
+with this oracle, and tests assert equality: the narrow extraction kernel
+(pipeline._extract_kernel) packs each whole document in-kernel, and the
+spread path's chunker (pipeline._chunk_kernel) packs ordered spans after a
+doc_id exchange.
 
 Frozen spec v2:
 - chunkable spans: kind in {heading, text, table} with non-empty text,

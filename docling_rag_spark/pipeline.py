@@ -5,21 +5,24 @@ Replaces the reference's single-process orchestration
 embed → insert) with one declarative DataFrame DAG. One extraction kernel
 serves two front ends (identical output, tested):
 
-NARROW (default — zero shuffles for extraction + lineage):
+NARROW (default — one Python stage, zero shuffles for extraction, chunks
+and lineage):
     read input table
       → [resume anti-join on lineage]             (E16, postgres.py:253-262)
       → one kernel row per document
       → mapInPandas(extraction kernel)            (Arrow-vectorized; ordering
-         computed in-kernel; one lineage sentinel row per kernel row)
-      → chunk assembly: doc_id exchange → streaming ChunkPacker
-         (reference HybridChunker analog, src/ingestion/chunker.py:45-55)
+         computed in-kernel; ChunkPacker over the document's blocks, the
+         reference HybridChunker analog, src/ingestion/chunker.py:45-55;
+         one lineage sentinel row per kernel row)
+      → blocks, chunks (+ md5 id) and lineage are filters of that output
 
 SPREAD (giant-document skew defuse — the north-rule salting path):
     … → sort spans into reading order → cut into slices of at most
     SPREAD_SLICE_SPANS spans (one kernel row each, ``part`` = slice rank)
     → optional round-robin repartition (a giant's slices spread over all
     tasks) → the same kernel → one window over doc_id ordered by
-    (part, order) → same chunk assembly; lineage = groupBy over the
+    (part, order) → chunk assembly (a slice is not a whole document):
+    doc_id exchange → streaming ChunkPacker; lineage = groupBy over the
     slice sentinels
 
 METADATA (doc_metadata, one shuffle):
@@ -27,8 +30,8 @@ METADATA (doc_metadata, one shuffle):
     only — nested-schema pruning), (doc_id, first-chunk text, n_tokens)
     from the chunks and (doc_id, page_num) from the extracted spans
       → one groupBy(doc_id) rollup → language of the first chunk
-    With persist_blocks=True both the kernel output and the chunks are
-    cached, so no Python kernel re-runs for it.
+    With persist_blocks=True the kernel output (and, in spread mode, the
+    chunks) is cached, so no Python kernel re-runs for it.
 
 Scale notes (100 TB):
 - Extraction is embarrassingly parallel per document → narrow is default;
@@ -45,6 +48,7 @@ from __future__ import annotations
 
 import traceback
 from collections.abc import Iterator
+from functools import partial
 from typing import TYPE_CHECKING
 
 from pyspark import StorageLevel
@@ -71,31 +75,43 @@ SPREAD_SLICE_SPANS = 64
 # --------------------------------------------------------------------------
 _KERNEL_SCHEMA = (
     "doc_id string, part int, order int, kind string, text string, "
-    "media_ref string, page_num int, error string, n_spans_in long, "
-    "partition_id int"
+    "media_ref string, page_num int, n_tokens int, error string, "
+    "n_spans_in long, partition_id int"
 )
 
 
-def _extract_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """One input row (doc_id, part, n_spans_in, spans[]) → its blocks in
-    reading order (``order`` 0-based within the row), then one sentinel row
-    (kind='__doc') carrying lineage: the error and the block count (in
-    `order`). The span traversal is the oracle's
-    (kernels.extract.extract_document_oracle), with per-span errors
-    promoted to row failure: a failing row emits ONLY its sentinel — the
-    reference's DocumentLoadError taxonomy (src/ingestion/document.py:191-203)
-    as dead-letter data instead of a failed task.
+def _extract_kernel(
+    batches: Iterator["pd.DataFrame"], chunk: bool = False
+) -> Iterator["pd.DataFrame"]:
+    """One input row (doc_id, part, n_spans_in, spans[]) → three record
+    kinds:
+
+    * its blocks in reading order (``order`` 0-based within the row);
+    * with ``chunk`` (narrow: the row is a whole document), its chunks —
+      kind='__chunk', ``order`` = chunk_index, text / page_num / n_tokens
+      from ChunkPacker(MAX_TOKENS) over those blocks;
+    * last, one sentinel (kind='__doc') carrying lineage: the error and the
+      block count (in ``order``).
+
+    ``n_tokens`` is null except on chunk rows. The span traversal is the
+    oracle's (kernels.extract.extract_document_oracle), with per-span
+    errors promoted to row failure: a failing row emits ONLY its sentinel
+    (no blocks, no chunks) — the reference's DocumentLoadError taxonomy
+    (src/ingestion/document.py:191-203) as dead-letter data instead of a
+    failed task.
     """
     import pandas as pd
     from pyspark import TaskContext
 
+    from .kernels.chunker import ChunkPacker
+
     pid = TaskContext.get().partitionId() if TaskContext.get() else -1
     cols = ("doc_id", "part", "order", "kind", "text", "media_ref", "page_num",
-            "error", "n_spans_in", "partition_id")
+            "n_tokens", "error", "n_spans_in", "partition_id")
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in cols}
 
-        def emit(doc_id, part, order, kind, text, ref, page, err, n_in):
+        def emit(doc_id, part, order, kind, text, ref, page, err, n_in, n_tok=None):
             out["doc_id"].append(doc_id)
             out["part"].append(part)
             out["order"].append(order)
@@ -103,6 +119,7 @@ def _extract_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame
             out["text"].append(text)
             out["media_ref"].append(ref)
             out["page_num"].append(page)
+            out["n_tokens"].append(n_tok)
             out["error"].append(err)
             out["n_spans_in"].append(n_in)
             out["partition_id"].append(pid)
@@ -132,6 +149,13 @@ def _extract_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame
             if err is None:
                 for order, (kind, text, ref, page) in enumerate(blocks):
                     emit(doc_id, part, order, kind, text, ref, page, None, n_in)
+                if chunk:
+                    packer = ChunkPacker(MAX_TOKENS)
+                    for kind, text, _ref, page in blocks:
+                        packer.add(kind, text, page)
+                    for c in packer.finish():
+                        emit(doc_id, part, c["chunk_index"], "__chunk", c["text"], None,
+                             c["page_num"], None, n_in, c["n_tokens"])
                 emit(doc_id, part, len(blocks), "__doc", None, None, None, None, n_in)
             else:
                 emit(doc_id, part, 0, "__doc", None, None, None, err, n_in)
@@ -156,8 +180,12 @@ def extract_documents_narrow(docs: DataFrame) -> DataFrame:
     extraction is embarrassingly parallel per document, so shuffling raw
     payload bytes (spread path) is pure overhead unless the input files are
     few/skewed. A giant document is one task's straggler here — switch to
-    the spread path when that dominates (SURVEY.md §7.3 #3)."""
-    return _document_rows(docs).mapInPandas(_extract_kernel, schema=_KERNEL_SCHEMA)
+    the spread path when that dominates (SURVEY.md §7.3 #3). Each row is a
+    whole document, so the kernel also packs its chunks (``__chunk``
+    rows)."""
+    return _document_rows(docs).mapInPandas(
+        partial(_extract_kernel, chunk=True), schema=_KERNEL_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
@@ -238,13 +266,13 @@ def order_spans(raw: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# stage 4: chunk assembly (heading-aware greedy packing — frozen spec v2,
-# kernels/chunker.py). Greedy packing with heading resets is sequentially
-# dependent per document, which windows cannot express (prefix-sum binning
-# — the v1 spec — let chunks exceed max_tokens when a span straddled a
-# boundary). Physical shape: ONE hash shuffle on doc_id + in-partition sort,
-# then a single-pass Arrow kernel that streams state across batch
-# boundaries — same exchange count as the old window+groupBy plan.
+# chunk assembly over ordered spans (heading-aware greedy packing — frozen
+# spec v2, kernels/chunker.py) — the spread path's chunker; narrow packs
+# in-kernel. Greedy packing with heading resets is sequentially dependent
+# per document, which windows cannot express (prefix-sum binning — the v1
+# spec — let chunks exceed max_tokens when a span straddled a boundary).
+# Physical shape: ONE hash shuffle on doc_id + in-partition sort, then a
+# single-pass Arrow kernel that streams state across batch boundaries.
 # --------------------------------------------------------------------------
 _CHUNK_SCHEMA = (
     "doc_id string, chunk_index int, text string, page_num int, n_tokens int"
@@ -295,6 +323,7 @@ def chunk_spans(extracted: DataFrame, max_tokens: int = MAX_TOKENS) -> DataFrame
     """Ordered spans → chunks table (reference HybridChunker semantics:
     heading-aware greedy packing — SURVEY.md §2.2 E11-E13; frozen spec v2 in
     kernels/chunker.py, shared with the single-process oracle).
+    run_extraction uses it in spread mode; narrow packs in-kernel.
 
     Only chunkable spans (kind/text filter pushed to the scan) are shuffled;
     id = md5('{doc_id}_{chunk_index}_{text}') stays a codegen expression.
@@ -304,13 +333,17 @@ def chunk_spans(extracted: DataFrame, max_tokens: int = MAX_TOKENS) -> DataFrame
         & F.col("text").isNotNull()
         & (F.length("text") > 0)
     ).select("doc_id", "order", "kind", "text", "page_num")
-    from functools import partial
-
     clustered = chunkable.repartition("doc_id").sortWithinPartitions(
         "doc_id", "order"
     )
     kernel = partial(_chunk_kernel, max_tokens=max_tokens)
-    return clustered.mapInPandas(kernel, schema=_CHUNK_SCHEMA).withColumn(
+    return _with_chunk_id(clustered.mapInPandas(kernel, schema=_CHUNK_SCHEMA))
+
+
+def _with_chunk_id(chunks: DataFrame) -> DataFrame:
+    """id = md5('{doc_id}_{chunk_index}_{text}') — the reference recipe
+    (src/ingestion/chunker.py:49) as a codegen expression."""
+    return chunks.withColumn(
         "id",
         F.md5(F.concat_ws("_", F.col("doc_id"), F.col("chunk_index"), F.col("text"))),
     )
@@ -427,8 +460,9 @@ def run_extraction(
     """Full pipeline → (extracted_spans, chunks, lineage).
 
     Modes (one kernel; both produce IDENTICAL output — tested):
-    * ``narrow`` (default): one kernel row per document, ordering
-      in-kernel, ZERO shuffles for extraction+lineage. Extraction is
+    * ``narrow`` (default): one kernel row per document, ordering and
+      chunking in-kernel, ZERO shuffles for extraction, chunks and
+      lineage. Extraction is
       embarrassingly parallel per document; at 100 TB the shuffle the
       spread path pays on every raw payload byte is the bottleneck, so
       narrow is the default.
@@ -443,13 +477,15 @@ def run_extraction(
     the parallelism (a many-file table at 100 TB is already well-split;
     shuffling every raw payload byte would dominate the job).
 
-    ``persist_blocks=True`` caches (MEMORY_AND_DISK) the kernel output and
-    the chunks — use it when materializing more than one of the outputs in
-    the same job batch (e.g. extract_job, the streaming sink): extracted and
-    lineage read the cached kernel output instead of each re-running the
-    extraction kernel, and doc_metadata reads both caches, so the chunk
-    exchange, sort and packer run once (in whichever sink comes first).
-    ``release_extraction(lineage)`` drops both caches when the batch is
+    ``persist_blocks=True`` caches (MEMORY_AND_DISK) — use it when
+    materializing more than one of the outputs in the same job batch (e.g.
+    extract_job, the streaming sink), so the Python kernels run once (in
+    whichever sink comes first):
+    * narrow caches ONE frame, the kernel output: extracted, chunks and
+      lineage are all filters of it, and doc_metadata reads it too;
+    * spread caches TWO: the kernel output, and the chunks, whose doc_id
+      exchange, sort and packer run after the ordering window.
+    ``release_extraction(lineage)`` drops the caches when the batch is
     written.
 
     * ``auto``: probe the per-doc span-count distribution and pick for you
@@ -478,9 +514,16 @@ def run_extraction(
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
     sentinels = raw.filter(F.col("kind") == "__doc")
     if mode == "narrow":
-        extracted = raw.filter(F.col("kind") != "__doc").select(
+        extracted = raw.filter(~F.col("kind").isin("__doc", "__chunk")).select(
             "doc_id", "order", "kind", "text", "media_ref", "page_num"
         )
+        chunks = _with_chunk_id(
+            raw.filter(F.col("kind") == "__chunk").select(
+                "doc_id", F.col("order").alias("chunk_index"), "text", "page_num",
+                "n_tokens",
+            )
+        )
+        cached = (raw,)
     else:
         extracted = order_spans(raw)
         # one row per document: the error of the first failing slice in
@@ -492,6 +535,11 @@ def run_extraction(
             F.max("n_spans_in").alias("n_spans_in"),
             F.sum("order").alias("order"),
         )
+        # a slice is not a whole document: chunk after the ordering window
+        chunks = chunk_spans(extracted)
+        if persist_blocks:
+            chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
+        cached = (raw, chunks)
     lineage = sentinels.select(
         F.lit(run_id).alias("run_id"),
         "partition_id",
@@ -506,18 +554,17 @@ def run_extraction(
         .alias("n_blocks_out"),
         _run_ts_col(run_ts).alias("ingested_at"),
     )
-    chunks = chunk_spans(extracted)
     if persist_blocks:
-        chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-        lineage._cached = (raw, chunks)  # what release_extraction unpersists
+        lineage._cached = cached  # what release_extraction unpersists
     return extracted, chunks, lineage
 
 
 def release_extraction(lineage: DataFrame) -> None:
     """Unpersist exactly the frames ``run_extraction(persist_blocks=True)``
     cached for the batch whose ``lineage`` frame it returned (the kernel
-    output and the chunks) — for a caller that runs many batches in one
-    session, so they do not accumulate. A no-op for an uncached run."""
+    output, plus the chunks in spread mode) — for a caller that runs many
+    batches in one session, so they do not accumulate. A no-op for an
+    uncached run."""
     for df in getattr(lineage, "_cached", ()):
         df.unpersist()
 

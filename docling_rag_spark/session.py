@@ -12,6 +12,36 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the default driver memory never exceeds this, however large the host
+MAX_DRIVER_MEM_GB = 48
+
+
+def _mem_total_kb() -> int | None:
+    """MemTotal of /proc/meminfo in kB; None where it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def _host_defaults() -> tuple[str, str]:
+    """(cores, driver memory) for a session sized from the host it runs
+    on: the cores this process may run on, and half of physical memory in
+    whole GB (at least 1g, at most MAX_DRIVER_MEM_GB) — in local mode the
+    driver JVM is the executor, and its Python workers need the rest.
+    Without a readable /proc/meminfo the memory is the cap."""
+    if hasattr(os, "sched_getaffinity"):
+        cpus = len(os.sched_getaffinity(0))
+    else:
+        cpus = os.cpu_count() or 1
+    kb = _mem_total_kb()
+    gb = MAX_DRIVER_MEM_GB if kb is None else kb // 2 // 2**20
+    return str(cpus), f"{min(max(gb, 1), MAX_DRIVER_MEM_GB)}g"
+
 
 def get_spark(
     master: str | None = None,
@@ -19,7 +49,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    default_cpus, default_mem = _host_defaults()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", default_cpus)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
@@ -36,11 +67,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE coalesce shuffles inside cached plans too (Spark 4 default
-        # false): run_extraction(persist_blocks=True) caches the chunks, and
-        # with false their doc_id exchange keeps all shuffle.partitions —
-        # measured on a traced perfbench extract_full pass (4 cores), 52
-        # tasks instead of 31 and the chunks sink's task time 3.3 s instead
-        # of 1.0-1.1 s
+        # false): any cached query plan with an exchange otherwise keeps all
+        # shuffle.partitions. run_extraction(persist_blocks=True) in spread
+        # mode caches the chunks, whose doc_id exchange is one — measured
+        # when narrow cached them too, on a traced perfbench extract_full
+        # pass (4 cores): 52 tasks instead of 31 and the chunks sink's task
+        # time 3.3 s instead of 1.0-1.1 s
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
@@ -55,8 +87,9 @@ def get_spark(
         # cannot pin a whole multi-GB split to one task at 100 TB
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # local mode: the driver IS the executor — size it for all concurrent
-        # tasks (32 tasks × shuffle+arrow buffers spill badly in 8g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # tasks (32 tasks × shuffle+arrow buffers spill badly in 8g), but
+        # never past the host's memory (_host_defaults)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", default_mem))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")

@@ -7,8 +7,10 @@ from spark-submit --conf / --num-executors, not from code. This job builds
 its session from the submit conf (it does not call session.get_spark), so
 ship get_spark's settings with it, including
 ``--conf spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``:
-run_extraction(persist_blocks=True) caches the chunks, and without it AQE
-cannot coalesce the cached chunk exchange's partitions.
+without it AQE cannot coalesce the partitions of an exchange inside a
+cached plan. In spread mode run_extraction(persist_blocks=True) caches the
+chunks, whose doc_id exchange is one; narrow chunks in-kernel and caches
+only the kernel output.
 
 Outputs under --output:
   extracted_spans/   ordered (doc_id, order, kind, text, media_ref, page_num)

@@ -74,32 +74,59 @@ EDGE_DOCS = [
         {"kind": "html", "text": "<p>unclosed paragraph that keeps going with plenty of text", "media_ref": None, "offset": 0},
         {"kind": "html", "text": "<<<>>> <p></p> <img> <table></table>", "media_ref": None, "offset": 1},
     ]),
+    # a malformed MINIPDF span fails the whole document: no blocks, no chunks
+    ("malformed_pdf", [
+        {"kind": "text", "text": "a good span before it", "media_ref": None, "offset": 0},
+        {"kind": "pdf", "text": "%MINIPDF 0\nthis payload lost its header", "media_ref": None, "offset": 10},
+    ]),
 ]
+FAILED = {"malformed_pdf"}
 
 
 def test_edge_docs_narrow_spread_oracle_agree(spark):
+    """Narrow packs chunks in the extraction kernel, spread runs
+    chunk_spans after its ordering window: both must equal the
+    single-process oracle, blocks and chunks (ids included)."""
     docs = spark.createDataFrame(EDGE_DOCS, schema=DOCUMENTS_SPANS_SCHEMA)
 
     def seqs(mode, **kw):
-        ex, _, lin = run_extraction(docs, run_id=mode, mode=mode, **kw)
+        ex, ch, lin = run_extraction(docs, run_id=mode, mode=mode, **kw)
         out: dict[str, list] = {d: [] for d, _ in EDGE_DOCS}
         for r in ex.collect():
             out[r["doc_id"]].append((r["order"], r["kind"], r["text"], r["media_ref"]))
-        statuses = {r["doc_id"]: r["status"] for r in lin.collect()}
-        return {k: sorted(v) for k, v in out.items()}, statuses
-
-    narrow, st_n = seqs("narrow")
-    spread, st_s = seqs("spread", repartition_to=4)
-    assert narrow == spread
-    assert st_n == st_s
-    assert set(st_n.values()) == {"processed"}
-    for doc_id, spans in EDGE_DOCS:
-        golden = [
-            (o, k, t, r) for (o, k, t, r, _p) in extract_document_oracle(
-                [dict(s) for s in spans]
+        chunks: dict[str, list] = {d: [] for d, _ in EDGE_DOCS}
+        for r in ch.collect():
+            chunks[r["doc_id"]].append(
+                (r["chunk_index"], r["text"], r["page_num"], r["n_tokens"], r["id"])
             )
-        ]
+        statuses = {r["doc_id"]: r["status"] for r in lin.collect()}
+        return (
+            {k: sorted(v) for k, v in out.items()},
+            {k: sorted(v) for k, v in chunks.items()},
+            statuses,
+        )
+
+    narrow, ch_n, st_n = seqs("narrow")
+    spread, ch_s, st_s = seqs("spread", repartition_to=4)
+    assert narrow == spread
+    assert ch_n == ch_s
+    assert st_n == st_s
+    assert st_n == {d: "failed" if d in FAILED else "processed" for d, _ in EDGE_DOCS}
+    for doc_id, spans in EDGE_DOCS:
+        if doc_id in FAILED:
+            assert narrow[doc_id] == [] and ch_n[doc_id] == [], doc_id
+            continue
+        oracle = extract_document_oracle([dict(s) for s in spans])
+        golden = [(o, k, t, r) for (o, k, t, r, _p) in oracle]
         assert narrow[doc_id] == golden, doc_id
+        want = chunk_document(oracle)
+        assert ch_n[doc_id] == [
+            (c["chunk_index"], c["text"], c["page_num"], c["n_tokens"], wid)
+            for c, wid in zip(want, chunk_ids(doc_id, want))
+        ], doc_id
+    # the corpus covers what it claims to: chunks on most docs, none on some
+    assert sum(bool(v) for v in ch_n.values()) >= 5
+    assert ch_n["empty_arr"] == ch_n["only_media"] == []
     # spot-check semantics: dup offsets keep array order among ties
     assert [t for (_o, _k, t, _r) in narrow["dup_offsets"]] == [
         "zero first entry", "alpha beta", "gamma delta words",

@@ -105,3 +105,24 @@ def test_doc_metadata_sink_plan_has_one_exchange(spark, tmp_path):
     assert not any("MapInPandas" in n for n in nodes), plan
     scans = [n for n in nodes if "FileScan" in n]
     assert scans and all("spans:array<struct<kind:string>>" in n for n in scans), plan
+
+
+def test_narrow_chunks_sink_plan_runs_one_python_stage(spark, tmp_path):
+    """Narrow mode packs the chunks inside the extraction kernel: the
+    chunks sink's whole plan, cached subtrees included, runs ONE Python
+    stage (the kernel) and ONE shuffle (the sink's key exchange), and
+    run_extraction caches one frame."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(_corpus(), schema=DOCUMENTS_SPANS_SCHEMA).write.parquet(path)
+    docs = spark.read.parquet(path)
+    _, chunks, lineage = run_extraction(docs, persist_blocks=True)
+    try:
+        sink = chunks.dropDuplicates(["id"])
+        plan = sink._jdf.queryExecution().executedPlan().toString()
+        n_cached = len(lineage._cached)
+    finally:
+        release_extraction(lineage)
+    nodes = [line.lstrip(" :|+-") for line in plan.splitlines()]
+    assert sum("MapInPandas" in n for n in nodes) == 1, plan
+    assert sum(bool(re.match(r"(\*\(\d+\) )?\w*Exchange\b", n)) for n in nodes) == 1, plan
+    assert n_cached == 1

@@ -15,12 +15,14 @@ sys.path.insert(0, str(REPO))
 COMMENT = {
     "extract_narrow": (
         "Narrow extraction: scan → single mapInPandas (ArrowEvalPython-free, "
-        "MapInPandas node), NO Exchange anywhere — extraction+lineage are "
-        "shuffle-free. The only wider stages in the full job are the chunker "
-        "groupBy/window downstream."
+        "MapInPandas node), NO Exchange anywhere — the kernel also packs each "
+        "document's chunks, so extraction, chunks and lineage are all "
+        "shuffle-free filters of its output. The only wider stages in the "
+        "full job are the sinks' key exchanges."
     ),
     "chunk_spans": (
-        "Chunker (spec v2): the chunkable-kind/text filter sits under ONE "
+        "Chunker (spec v2, the spread path's; narrow packs in-kernel): the "
+        "chunkable-kind/text filter sits under ONE "
         "hash Exchange on doc_id + in-partition Sort, then a single "
         "MapInPandas packer (greedy+heading state streams across Arrow "
         "batches); the md5 id stays a codegen Project above it. Same "
@@ -131,8 +133,8 @@ def main() -> None:
 
     plans = {}
     plans["extract_narrow"] = extract_documents_narrow(corpus)
-    extracted, chunks, lineage = run_extraction(corpus, run_id="plans")
-    plans["chunk_spans"] = chunks
+    extracted, _, lineage = run_extraction(corpus, run_id="plans")
+    plans["chunk_spans"] = chunk_spans(extracted)
     plans["knn_bruteforce"] = knn_bruteforce(spark, sf)
     plans["pricing_summary"] = pricing_summary(spark, sf)
     plans["revenue_by_nation"] = revenue_by_nation(spark, sf)
