@@ -31,8 +31,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from docling_rag_spark import artifacts  # noqa: E402
 from docling_rag_spark.pipeline import run_extraction  # noqa: E402
 from docling_rag_spark.session import get_spark  # noqa: E402
 from docling_rag_spark.sources.corpus import interleaved_corpus  # noqa: E402
@@ -77,24 +79,23 @@ HEADLINE = [
 ]
 
 
-def materialize_bench_corpus(spark, sf_dir: str, mult: int, cache_root: str) -> str:
-    """Derive + replicate the interleaved corpus (deterministic; untimed)."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # v2: datagen emits heading blocks; version tag invalidates old caches
-    out = os.path.join(cache_root, f"bench_corpus_v2_{tag}_x{mult}.parquet")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    base = interleaved_corpus(spark, sf_dir)
-    if mult > 1:
-        reps = spark.range(mult).select(F.col("id").alias("rep"))
-        base = base.crossJoin(reps).select(
-            F.concat_ws("#", "doc_id", "rep").alias("doc_id"), "spans"
-        )
-    # write many files: a single parquet row group cannot be split, which
-    # would pin the scan+explode stage to ONE task at any core count (a real
-    # 100 TB Iceberg table is inherently many-file)
-    base.repartition(128).write.mode("overwrite").parquet(out)
-    return out
+def materialize_bench_corpus(spark, sf_dir: str, mult: int) -> DataFrame:
+    """Derive + replicate the interleaved corpus (deterministic; untimed),
+    built once per (sf, mult) as an artifact-store memo."""
+
+    def build() -> DataFrame:
+        base = interleaved_corpus(spark, sf_dir)
+        if mult > 1:
+            reps = spark.range(mult).select(F.col("id").alias("rep"))
+            base = base.crossJoin(reps).select(
+                F.concat_ws("#", "doc_id", "rep").alias("doc_id"), "spans"
+            )
+        # write many files: a single parquet row group cannot be split,
+        # which would pin the scan+explode stage to ONE task at any core
+        # count (a real 100 TB Iceberg table is inherently many-file)
+        return base.repartition(128)
+
+    return artifacts.parquet(spark, f"bench_corpus_x{mult}", sf_dir, build)
 
 
 def main() -> None:
@@ -105,9 +106,7 @@ def main() -> None:
     spark = get_spark(master=f"local[{cpus}]", app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    cache_root = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
-    corpus_path = materialize_bench_corpus(spark, sf_dir, mult, cache_root)
-    corpus = spark.read.parquet(corpus_path)
+    corpus = materialize_bench_corpus(spark, sf_dir, mult)
     n_docs = corpus.count()
 
     timings: dict[str, float] = {}

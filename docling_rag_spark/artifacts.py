@@ -1,0 +1,144 @@
+"""One on-disk artifact store for every per-sf memo.
+
+Heavy derived tables (the derived corpus, the extraction outputs, the
+chunk table and its embeddings, the IVF index) are built once per source
+directory and then only read — the shape of the reference's one-time HNSW
+index build (docker/init.sql:20) and its chunks table written at ingest.
+Every memo goes through :func:`parquet`, which owns the cache root, the
+artifact name, the completeness check, the clean-up of superseded entries
+and the fallback when nothing can be written.
+
+An artifact lives at ``{ROOT}/{name}_{code}_{sf_tag}_{fingerprint}.parquet``:
+
+- ``code``: content hash over every ``.py`` file of this package (``zip``
+  when the sources cannot be read, e.g. a --py-files zip), so any package
+  edit invalidates every memo without a manual version bump;
+- ``sf_tag``: the basename of the source directory;
+- ``fingerprint``: digest of the source parquet files (relative path, size,
+  mtime), so same-basename corpora (/a/sf0.01 vs /b/sf0.01) and data
+  regenerated in place never serve each other's rows.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import re
+import shutil
+import warnings
+from collections.abc import Callable
+from pathlib import Path
+
+from pyspark.errors import AnalysisException, PySparkException
+from pyspark.sql import DataFrame, SparkSession
+
+_PKG = Path(__file__).resolve().parent
+ROOT = str(_PKG.parent / "data")
+# same code, different fingerprint: either data regenerated in place (dead)
+# or a sibling corpus sharing the basename (alive) — keeping the two most
+# recent lets an A/B corpus pair coexist without rebuild thrash
+KEEP_RECENT = 2
+_DIGEST = r"(?:[0-9a-f]{10}|zip|nosrc)"
+
+
+def _code_hash() -> str:
+    """Content hash over every ``.py`` file of the package."""
+    h = hashlib.md5()
+    try:
+        files = sorted(_PKG.rglob("*.py"))
+        for p in files:
+            h.update(p.relative_to(_PKG).as_posix().encode())
+            h.update(p.read_bytes())
+    except OSError:
+        return "zip"
+    return h.hexdigest()[:10] if files else "zip"
+
+
+def source_fingerprint(sf_dir: str) -> str:
+    """Short digest of the source parquet files under ``sf_dir`` (relative
+    path + size + mtime_ns of every .parquet file)."""
+    h = hashlib.md5()
+    try:
+        for root, _dirs, files in sorted(os.walk(sf_dir)):
+            for f in sorted(files):
+                if not f.endswith(".parquet"):
+                    continue
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                rel = os.path.relpath(p, sf_dir)
+                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
+    except OSError:
+        return "nosrc"
+    return h.hexdigest()[:10]
+
+
+def parquet(
+    spark: SparkSession, name: str, sf_dir: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """``build()`` memoized as parquet under :data:`ROOT`, keyed on the
+    package code and the source data of ``sf_dir``.
+
+    A complete artifact (``_SUCCESS`` present) is read first, whether or
+    not the root is writable — a read-only deployment that ships pre-built
+    artifacts serves them — and its read is never caught: a corrupt
+    artifact fails loud instead of being rebuilt silently per session.
+    Only the build is guarded: when the root cannot be created or written,
+    or the write fails at the storage level, a warning names the memo and
+    the live ``build()`` plan is returned (correct, but every call
+    re-executes it). Anything ``build()`` itself raises propagates."""
+    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    out = os.path.join(
+        ROOT, f"{name}_{_code_hash()}_{tag}_{source_fingerprint(sf_dir)}.parquet"
+    )
+    if os.path.exists(os.path.join(out, "_SUCCESS")):
+        return spark.read.parquet(out)
+    try:
+        os.makedirs(ROOT, exist_ok=True)
+        writable = os.access(ROOT, os.W_OK)
+    except OSError:
+        writable = False
+    df = build()
+    if writable:
+        try:
+            df.write.mode("overwrite").parquet(out)
+        except (OSError, AnalysisException, PySparkException):
+            writable = False
+    if not writable:
+        warnings.warn(
+            f"disk memo {out!r} unavailable (root not writable or write "
+            "failed); running the live plan — every call re-executes it"
+        )
+        return df
+    _remove_stale(name, tag, out)
+    return spark.read.parquet(out)
+
+
+def _remove_stale(name: str, sf_tag: str, keep: str) -> None:
+    """Delete the superseded siblings of ``keep`` (same ``name`` and
+    ``sf_tag``): every entry built by different code (unreadable by this
+    code, the name embeds its hash), and same-code entries beyond the
+    :data:`KEEP_RECENT` most recent (by mtime, ``keep`` included).
+
+    Siblings are matched by one anchored pattern over the fixed-width
+    digests, so an ``sf_tag`` holding ``_`` (``perfbench_curate``) and a
+    name that prefixes another (``chunks`` / ``chunk_emb``) parse exactly."""
+    pat = re.compile(
+        rf"{re.escape(name)}_({_DIGEST})_{re.escape(sf_tag)}_{_DIGEST}\.parquet"
+    )
+    keep_name = os.path.basename(keep)
+    keep_code = pat.fullmatch(keep_name).group(1)
+    same_code = []
+    for b in os.listdir(ROOT):
+        m = pat.fullmatch(b)
+        if m is None or b == keep_name:
+            continue
+        if m.group(1) != keep_code:
+            shutil.rmtree(os.path.join(ROOT, b), ignore_errors=True)
+        else:
+            same_code.append(os.path.join(ROOT, b))
+    try:
+        same_code.sort(key=os.path.getmtime, reverse=True)
+    except OSError:
+        return  # a concurrent clean-up removed one; leave the rest
+    for p in same_code[KEEP_RECENT - 1:]:
+        shutil.rmtree(p, ignore_errors=True)

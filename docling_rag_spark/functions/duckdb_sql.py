@@ -88,11 +88,5 @@ def shingles_sql(c: str, n: int = 3) -> str:
     )
 
 
-def term_frequency_sql(c: str, terms: list[str]) -> str:
-    toks = tokens_sql(c, lower=True)
-    arr = sql_list([t.lower() for t in terms])
-    return f"len(list_filter({toks}, t -> list_contains({arr}, t)))"
-
-
 def chunk_id_sql(doc_id: str, idx: str, text: str) -> str:
     return f"md5({doc_id}::varchar || '_' || {idx}::varchar || '_' || {text})"

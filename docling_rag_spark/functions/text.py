@@ -124,15 +124,6 @@ def shingles_col(c: Column, n: int = 3) -> Column:
     )
 
 
-def term_frequency_col(c: Column, terms: list[str]) -> Column:
-    """Total occurrences of the (lowercased) query terms in the text — the
-    token-overlap fulltext score (stand-in for ts_rank_cd,
-    reference src/storage/postgres.py:167-198)."""
-    toks = tokens_col(c, lower=True)
-    arr = F.array(*[F.lit(t.lower()) for t in terms])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-
 def chunk_id_col(doc_id: Column, idx: Column, text: Column) -> Column:
     """md5('{doc_id}_{idx}_{text}') — exact reference recipe
     (src/ingestion/chunker.py:49)."""

@@ -1,7 +1,11 @@
 """Driver-facing wrappers for the core extraction pipeline (SURVEY.md §2.2).
 
 These run the real engine's default path (corpus → mapInPandas extraction,
-ordered in-kernel → chunker → lineage) at the given sf. HTML/PDF parsing is
+ordered in-kernel → chunker → lineage) at the given sf. The extracted
+spans, chunks and lineage are built once per sf and then read back as
+parquet memos of the artifact store (``artifacts.parquet``: keyed on the
+package code and the source data, so any edit or data change rebuilds
+them); ``extract_doc_metadata`` runs the live pipeline. HTML/PDF parsing is
 not SQL-expressible directly, so the DuckDB oracles compare against
 committed GOLDEN parquet (tests/golden/extract_*.parquet) generated by the
 pure-Python single-process oracle (tests/make_extract_golden.py — no Spark
@@ -14,164 +18,20 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..pipeline import chunk_spans, doc_metadata, run_extraction
 from ..sources.corpus import corpus_for_sf
-
-
-def _spec_tag() -> str:
-    """Content hash of every source file the memoized extraction output
-    depends on (kernels + datagen + pipeline) — baked into the memo path,
-    so editing a kernel AUTOMATICALLY invalidates stale memos instead of
-    relying on a manual version bump (a stale memo would fail the driver
-    gate against the freshly regenerated golden)."""
-    import hashlib
-    from pathlib import Path
-
-    pkg = Path(__file__).resolve().parent.parent
-    try:
-        h = hashlib.md5()
-        for p in sorted((pkg / "kernels").glob("*.py")) + [
-            pkg / "datagen.py", pkg / "pipeline.py"
-        ]:
-            h.update(p.read_bytes())
-        return h.hexdigest()[:10]
-    except OSError:
-        # packaged in a --py-files zip: sources not directly readable;
-        # memoization is a local-gate convenience only
-        return "zip"
-
-
-def source_fingerprint(sf_dir: str) -> str:
-    """Short content digest of the source parquet files under ``sf_dir``
-    (relative path + size + mtime_ns of every .parquet file). Folded into
-    every on-disk memo filename so two corpora sharing a directory BASENAME
-    (/a/sf0.01 vs /b/sf0.01), or testdata regenerated in place, can never
-    serve each other's memoized rows on non-oracle paths (bench, direct
-    query use)."""
-    import hashlib
-
-    h = hashlib.md5()
-    try:
-        for root, _dirs, files in sorted(os.walk(sf_dir)):
-            for f in sorted(files):
-                if not f.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                rel = os.path.relpath(p, sf_dir)
-                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}".encode())
-    except OSError:
-        return "nosrc"
-    return h.hexdigest()[:10]
-
-
-def _disk_memo(
-    spark: SparkSession, sf_dir: str, prefix: str, pipe, extra_tag: str = ""
-) -> DataFrame:
-    """Memoize a deterministic per-sf DataFrame on disk (same pattern +
-    cache root as corpus_for_sf): the builder runs ONCE per sf instead of
-    once per query, and the memo is a parquet file — nothing lingers in
-    executor storage. The path carries a spec content hash (_spec_tag) AND
-    a source-data fingerprint (source_fingerprint), so neither kernel edits
-    nor regenerated/relocated testdata can ever serve stale results.
-    ``extra_tag``: extra content hash for memos whose values depend on
-    source files outside the default spec set (e.g. embed.py)."""
-    cache_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "data",
-    )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    xt = f"_{extra_tag}" if extra_tag else ""
-    out = os.path.join(
-        cache_root,
-        f"{prefix}_{_spec_tag()}{xt}_{tag}_{source_fingerprint(sf_dir)}.parquet",
-    )
-    try:
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            pipe().write.mode("overwrite").parquet(out)
-            _gc_stale_artifacts(cache_root, prefix, tag, os.path.basename(out))
-        return spark.read.parquet(out)
-    except (OSError, AnalysisException, PySparkException):
-        # The ONLY legitimate fallbacks: read-only repo dir / zip deploy
-        # (OSError) or a storage-level write/read failure (AnalysisException
-        # family). Deterministic pipe → correctness-safe, but a PERSISTENT
-        # write failure silently re-running extraction per query is a perf
-        # cliff — warn loud (parity with _ivf_index, round-4 verdict #5).
-        # Anything else (a bug in the pipe itself) propagates.
-        import warnings
-
-        warnings.warn(
-            f"disk memo {out!r} unavailable (write/read failed); "
-            "running the live DAG — every query re-executes this pipeline"
-        )
-        return pipe()
-
-
-def _gc_stale_artifacts(
-    cache_root: str, prefix: str, sf_tag: str, keep_basename: str,
-    keep_recent: int = 2,
-) -> None:
-    """Delete PROVABLY superseded artifacts for this (prefix, sf_tag):
-
-    - entries whose spec+extra tag prefix (EVERYTHING before the sf tag,
-      not just the first underscore token — a same-spec stale extra_tag,
-      e.g. after editing retrieval code, is just as dead/unreadable as a
-      different spec hash and must not occupy a keep slot) differs from
-      ``keep_basename``'s — built by a different code version, unreadable
-      by this code (the path embeds the current tags), only eating disk;
-    - same-tag entries beyond the ``keep_recent`` most recent (by mtime,
-      the just-written artifact included). A same-tag different-
-      fingerprint entry is EITHER testdata regenerated in place (dead) OR
-      a sibling corpus sharing the directory basename (/a/sf0.01 vs
-      /b/sf0.01 — alive, round-4 advice: keep-exactly-one caused perpetual
-      rebuild thrash between such corpora and FileNotFound for concurrent
-      readers). Keeping the most-recent two lets an A/B corpus pair
-      coexist while still bounding disk."""
-    import glob
-    import shutil
-
-    def tag_key(basename: str) -> str:
-        # full spec(+extra) portion: strip '{prefix}_', cut at the LAST
-        # '_{sf_tag}' separator (spec/extra are fixed-width md5 hex, so a
-        # tag like 'sf0.01' can never appear inside them)
-        stem = basename[len(prefix) + 1:]
-        i = stem.rfind(f"_{sf_tag}_")
-        if i < 0 and stem.endswith((f"_{sf_tag}", f"_{sf_tag}.parquet")):
-            i = stem.rfind(f"_{sf_tag}")
-        return stem[:i] if i >= 0 else stem
-
-    keep_key = tag_key(keep_basename)
-    same_spec = []
-    for p in glob.glob(os.path.join(cache_root, f"{prefix}_*")):
-        b = os.path.basename(p)
-        if b == keep_basename:
-            continue
-        if not (
-            f"_{sf_tag}_" in b or b.endswith((f"_{sf_tag}", f"_{sf_tag}.parquet"))
-        ):
-            continue
-        if tag_key(b) != keep_key:
-            shutil.rmtree(p, ignore_errors=True)
-        else:
-            same_spec.append(p)
-    try:
-        same_spec.sort(key=os.path.getmtime, reverse=True)
-    except OSError:
-        return  # concurrent GC already removed one — leave the rest
-    for p in same_spec[max(0, keep_recent - 1):]:
-        shutil.rmtree(p, ignore_errors=True)
 
 
 def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared corpus→extract→order prefix of the extraction queries —
     the default (narrow) path of run_extraction, the one jobs run."""
-    corpus = corpus_for_sf(spark, sf_dir)
-    return _disk_memo(
-        spark, sf_dir, "extracted", lambda: run_extraction(corpus)[0]
+    return artifacts.parquet(
+        spark, "extracted", sf_dir,
+        lambda: run_extraction(corpus_for_sf(spark, sf_dir))[0],
     )
 
 
@@ -186,9 +46,8 @@ def extract_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunker shuffle + Arrow packer (measured: the dominant cost of the
     chunk flagship at sf0.1). With it each branch is a parquet scan with
     pushdown — the exact shape of reading the production chunks table."""
-    return _disk_memo(
-        spark, sf_dir, "chunks",
-        lambda: chunk_spans(_extracted(spark, sf_dir)),
+    return artifacts.parquet(
+        spark, "chunks", sf_dir, lambda: chunk_spans(_extracted(spark, sf_dir))
     )
 
 
@@ -210,7 +69,7 @@ def extract_lineage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineage = run_extraction(corpus, run_id="lineage-gate")[2]
         return lineage.select("doc_id", "status", "n_spans_in", "n_blocks_out")
 
-    return _disk_memo(spark, sf_dir, "lineage", pipe)
+    return artifacts.parquet(spark, "lineage", sf_dir, pipe)
 
 
 def extract_span_kinds_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,8 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.duckdb_sql import term_frequency_sql, tokens_sql
-from ..functions.text import chunk_id_col, term_frequency_col, tokens_col
+from .. import artifacts
+from ..functions.duckdb_sql import tokens_sql
+from ..functions.text import chunk_id_col, tokens_col
 from .common import table
 from .similarity import QUERY_VEC_ID, _dot, _dot_sql, _lit_vec, _norm, _query_vec
 
@@ -30,30 +31,6 @@ OVERFETCH = 3  # reference src/retrieval/search.py:26-30
 RRF_K = 60  # reference src/retrieval/search.py:7
 PAGE_SIZE = 50
 CHUNK_TOKENS = 16  # small budget so sandbox docs (~54 tokens) multi-chunk
-
-
-# --------------------------------------------------------------------------
-# T2: fulltext top-k (token-overlap score — ts_rank_cd stand-in,
-# reference src/storage/postgres.py:167-198)
-# --------------------------------------------------------------------------
-def fulltext_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    score = term_frequency_col(F.col("text"), FT_TERMS)
-    return (
-        docs.select("doc_id", score.alias("ft_score"))
-        .filter(F.col("ft_score") > 0)
-        .orderBy(F.desc("ft_score"), F.asc("doc_id"))
-        .limit(TOP_K)
-    )
-
-
-FULLTEXT_SQL = f"""
-select doc_id, {term_frequency_sql('text', FT_TERMS)} as ft_score
-from documents
-where {term_frequency_sql('text', FT_TERMS)} > 0
-order by ft_score desc, doc_id asc
-limit {TOP_K}
-"""
 
 
 # --------------------------------------------------------------------------
@@ -662,52 +639,30 @@ select * from rehydrated
 CHUNK_QUERY_TEXT = " ".join(FT_TERMS)  # one query feeds both arms
 
 
-def _retrieval_tag() -> str:
-    """Content hash over embed.py + this module — memoized retrieval
-    artifacts (chunk table, chunk embeddings) depend on these recipes."""
-    import hashlib
-    import os as _os
-
-    h = hashlib.md5()
-    try:
-        d = _os.path.dirname(_os.path.abspath(__file__))
-        for mod in ("embed.py", "retrieval.py"):
-            with open(_os.path.join(d, mod), "rb") as f:
-                h.update(f.read())
-        return h.hexdigest()[:10]
-    except OSError:  # --py-files zip: memoization is a local convenience
-        return "zip"
-
-
 def _chunk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The chunk table as a persisted artifact: in production chunks are
     written ONCE at ingest and every retrieval query reads the stored table
     (reference chunks table, docker/init.sql:5-12) — re-running the chunker
     per query is not the serving shape. The `chunk_documents` driver query
     still exercises the live chunker; retrieval consumers read this memo."""
-    from .extraction_queries import _disk_memo
-
-    return _disk_memo(
-        spark, sf_dir, "sqlchunks",
-        lambda: chunk_documents_sql_variant(spark, sf_dir),
-        extra_tag=_retrieval_tag(),
+    return artifacts.parquet(
+        spark, "sqlchunks", sf_dir, lambda: chunk_documents_sql_variant(spark, sf_dir)
     )
 
 
 def _chunk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk embeddings as a PERSISTED artifact — the reference writes chunk
     vectors at ingest (docker/init.sql:10) and queries only probe them; the
-    embed UDF must not re-encode the corpus per query. Disk-memoized with an
-    extra content hash over embed.py + this module (the chunker recipe), so
-    editing either recipe rebuilds instead of serving stale vectors."""
+    embed UDF must not re-encode the corpus per query. An artifact-store
+    memo, so editing the embed or chunker recipe rebuilds instead of
+    serving stale vectors."""
     from .embed import embed_udf
-    from .extraction_queries import _disk_memo
 
     def pipe() -> DataFrame:
         chunks = _chunk_table(spark, sf_dir)
         return chunks.select("id", embed_udf()(F.col("text")).alias("embedding"))
 
-    return _disk_memo(spark, sf_dir, "chunk_emb", pipe, extra_tag=_retrieval_tag())
+    return artifacts.parquet(spark, "chunk_emb", sf_dir, pipe)
 
 
 def hybrid_rrf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -834,17 +789,14 @@ ORACLES = {
     "revenue_by_nation": REVENUE_SQL,
     "chunk_documents": CHUNK_SQL,
 }
-# Retired from the 50-slot driver contract (cd/BM25 supersede the plain
-# token-overlap ranker; hybrid_rrf_rehydrated contains hybrid_rrf's fusion;
-# Q18+revenue keep the TPC-H join/agg shapes) — still oracle-checked by
-# tests/test_extended_oracles.py.
+# Retired from the 50-slot driver contract (hybrid_rrf_rehydrated contains
+# hybrid_rrf's fusion; Q18+revenue keep the TPC-H join/agg shapes) — still
+# oracle-checked by tests/test_extended_oracles.py.
 EXTRA_QUERIES = {
-    "fulltext_topk": fulltext_topk,
     "hybrid_rrf": hybrid_rrf,
     "paginate_docs_keyset": paginate_docs_keyset,
 }
 EXTRA_ORACLES = {
-    "fulltext_topk": FULLTEXT_SQL,
     "hybrid_rrf": HYBRID_RRF_SQL,
     "paginate_docs_keyset": PAGINATE_KEYSET_SQL,
 }

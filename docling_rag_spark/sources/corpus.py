@@ -20,6 +20,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import artifacts
 from ..datagen import build_spans
 from ..schemas import DOCUMENTS_SPANS_SCHEMA
 
@@ -85,32 +86,13 @@ def interleaved_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(_derive_kernel, schema=_SPANS_DDL)
 
 
-def materialize_corpus(spark: SparkSession, sf_dir: str, out_path: str) -> str:
-    """Write the derived corpus once (idempotent) and return its path.
-    Materializing avoids re-deriving spans on every query; the parquet file
-    IS the engine's input table for tests/bench at this sf."""
-    marker = os.path.join(out_path, "_SUCCESS")
-    if not os.path.exists(marker):
-        interleaved_corpus(spark, sf_dir).write.mode("overwrite").parquet(out_path)
-    return out_path
-
-
 def read_corpus(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(DOCUMENTS_SPANS_SCHEMA).parquet(path)
 
 
-def corpus_for_sf(spark: SparkSession, sf_dir: str, cache_root: str | None = None) -> DataFrame:
-    """Materialized-or-derived corpus for a given testdata sf dir."""
-    cache_root = cache_root or os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "data",
+def corpus_for_sf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The derived corpus for a testdata sf dir, built once and read back as
+    an artifact-store memo (the engine's input table at this sf)."""
+    return artifacts.parquet(
+        spark, "corpus", sf_dir, lambda: interleaved_corpus(spark, sf_dir)
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    # v2: datagen emits heading blocks (h2 sections / MINIPDF heading lines);
-    # the version tag invalidates corpora materialized by older datagen
-    out = os.path.join(cache_root, f"corpus_v2_{tag}.parquet")
-    try:
-        return read_corpus(spark, materialize_corpus(spark, sf_dir, out))
-    except Exception:
-        # read-only repo dir or concurrent writer: derive on the fly
-        return interleaved_corpus(spark, sf_dir)

@@ -587,15 +587,15 @@ def test_ivf_corrupt_artifact_fails_loud(spark, tmp_path, monkeypatch):
 
     import pytest
 
+    from docling_rag_spark import artifacts
     from docling_rag_spark.operators import similarity as S
 
     # build a private copy of the artifact under tmp_path, then corrupt its
     # centroids part — the shared artifact under data/ is never touched
-    out = str(tmp_path / "ivf_test_sf0.001")
-    monkeypatch.setattr(S, "_ivf_artifact_dir", lambda sf_dir: out)
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path))
     assigned, cents = S._ivf_index(spark, "/root/testdata/sf0.001")
     assert assigned.count() > 0
-    roots = glob.glob(os.path.join(out, "centroids", "*.parquet"))
+    roots = glob.glob(os.path.join(tmp_path, "ivf_centroids_*", "*.parquet"))
     assert roots, "ivf artifact not found"
     with open(roots[0], "w") as f:
         f.write("corrupt, not parquet")
@@ -696,7 +696,7 @@ def test_lsh_bucket_dups_planted_mega_bucket(spark):
     assert t_mega < 4 * t_uniform + 5, (t_mega, t_uniform)
 
 
-def test_disk_memo_write_failure_warns_and_falls_back(spark, monkeypatch):
+def test_memo_write_failure_warns_and_falls_back(spark, tmp_path, monkeypatch):
     """Round-5 (verdict #5, parity with _ivf_index): a storage-level memo
     write failure must WARN and run the live DAG — a persistent failure
     silently re-running extraction per query is a perf cliff with no
@@ -705,15 +705,16 @@ def test_disk_memo_write_failure_warns_and_falls_back(spark, monkeypatch):
     from pyspark.errors import AnalysisException
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from docling_rag_spark.operators import extraction_queries as EQ
+    from docling_rag_spark import artifacts
 
     def boom(self, path, **kw):
         raise AnalysisException("simulated storage failure")
 
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path))
     monkeypatch.setattr(DataFrameWriter, "parquet", boom)
     with pytest.warns(UserWarning, match="disk memo"):
-        df = EQ._disk_memo(
-            spark, "/root/testdata/sf0.001", "memotest",
+        df = artifacts.parquet(
+            spark, "memotest", "/root/testdata/sf0.001",
             lambda: spark.range(3),
         )
     assert df.count() == 3
@@ -723,63 +724,69 @@ def test_disk_memo_write_failure_warns_and_falls_back(spark, monkeypatch):
         raise ValueError("bug in the pipeline builder")
 
     with pytest.raises(ValueError, match="bug in the pipeline"):
-        EQ._disk_memo(spark, "/root/testdata/sf0.001", "memotest2", bad_pipe)
+        artifacts.parquet(spark, "memotest2", "/root/testdata/sf0.001", bad_pipe)
 
 
-def test_gc_stale_artifacts_scoping(tmp_path):
-    """Round-5 (advice, medium): GC deletes only provably-superseded
-    artifacts — different spec tag (unreadable by this code), or beyond
-    the two most-recent same-spec entries. A sibling corpus sharing the
-    directory basename survives a rebuild (keep-exactly-one caused
-    perpetual thrash + FileNotFound for its concurrent readers); other
-    sf tags are untouched."""
+def test_stale_artifact_cleanup_scoping(tmp_path, monkeypatch):
+    """Round-5 (advice, medium): clean-up deletes only provably-superseded
+    artifacts — built by a different code hash (unreadable by this code),
+    or beyond the two most-recent same-code entries. A sibling corpus
+    sharing the directory basename survives a rebuild (keep-exactly-one
+    caused perpetual thrash + FileNotFound for its concurrent readers);
+    other sf tags, other names — including a name the kept one prefixes
+    or is prefixed by — are untouched, and an sf tag holding '_' parses."""
     import os
     import time
 
-    from docling_rag_spark.operators.extraction_queries import (
-        _gc_stale_artifacts,
-    )
+    from docling_rag_spark import artifacts
 
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path))
+    c1, c0 = "c1c1c1c1c1", "dead000000"
+    fa, fb, fc = "faaaaaaaaa", "fbbbbbbbbb", "fccccccccc"
     names = [
-        "pre_s1_sf0.01_fC.parquet",    # same spec, oldest → deleted
-        "pre_s1_sf0.01_fB.parquet",    # sibling corpus, same spec → kept
-        "pre_s1_sf0.01_fA.parquet",    # the just-written artifact → kept
-        "pre_dead_sf0.01_fA.parquet",  # other spec tag → deleted
-        "pre_s1_sf0.1_fA.parquet",     # other sf tag → untouched
-        "prefix2_s1_sf0.01_fA.parquet",  # other prefix → untouched
-        # same spec, STALE extra_tag (round-5 advice): dead/unreadable —
-        # deleted even though newer than every same-tag sibling, and must
-        # NOT occupy a keep_recent slot (fB below survives despite it)
-        "pre_s1_xOLD_sf0.01_fA.parquet",
+        f"chunks_{c1}_sf0.01_{fc}.parquet",  # same code, oldest → deleted
+        f"chunks_{c1}_sf0.01_{fb}.parquet",  # sibling corpus, same code → kept
+        f"chunks_{c1}_sf0.01_{fa}.parquet",  # the just-written artifact → kept
+        f"chunks_{c0}_sf0.01_{fa}.parquet",  # other code hash → deleted
+        f"chunks_{c1}_sf0.1_{fa}.parquet",  # other sf tag → untouched
+        f"chunk_emb_{c0}_sf0.01_{fa}.parquet",  # other name (prefix) → untouched
+        f"chunks2_{c0}_sf0.01_{fa}.parquet",  # other name → untouched
+        # same sf tag after a '_': another tag, not a sibling → untouched
+        f"chunks_{c0}_x_sf0.01_{fa}.parquet",
+        # other code hash, NEWER than every same-code sibling: dead, and it
+        # must NOT occupy a keep slot (fB above survives despite it)
+        f"chunks_zip_sf0.01_{fa}.parquet",
     ]
     now = time.time()
     for i, n in enumerate(names):
         (tmp_path / n).mkdir()
         os.utime(tmp_path / n, (now + i, now + i))
-    _gc_stale_artifacts(str(tmp_path), "pre", "sf0.01", "pre_s1_sf0.01_fA.parquet")
+    artifacts._remove_stale("chunks", "sf0.01", str(tmp_path / names[2]))
     left = {p.name for p in tmp_path.iterdir()}
-    assert left == {
-        "pre_s1_sf0.01_fA.parquet",
-        "pre_s1_sf0.01_fB.parquet",
-        "pre_s1_sf0.1_fA.parquet",
-        "prefix2_s1_sf0.01_fA.parquet",
-    }
-    # and with an extra-tagged keep_basename, a bare-spec sibling is the
-    # stale one
-    for n in ("pre_s1_xNEW_sf0.01_fA.parquet", "pre_s1_sf0.01_fZ.parquet"):
+    assert left == set(names) - {names[0], names[3], names[8]}
+
+    # an underscore sf tag (perfbench_curate) and the shorter name of a
+    # prefix pair: only chunk_emb's own stale sibling goes
+    for n in (
+        f"chunk_emb_{c1}_perfbench_curate_{fa}.parquet",
+        f"chunk_emb_{c0}_perfbench_curate_{fb}.parquet",
+        f"chunks_{c0}_perfbench_curate_{fa}.parquet",
+        f"chunk_emb_{c0}_curate_{fa}.parquet",
+    ):
         (tmp_path / n).mkdir()
-    _gc_stale_artifacts(
-        str(tmp_path), "pre", "sf0.01", "pre_s1_xNEW_sf0.01_fA.parquet"
+    before = {p.name for p in tmp_path.iterdir()}
+    artifacts._remove_stale(
+        "chunk_emb", "perfbench_curate",
+        str(tmp_path / f"chunk_emb_{c1}_perfbench_curate_{fa}.parquet"),
     )
     left = {p.name for p in tmp_path.iterdir()}
-    assert "pre_s1_xNEW_sf0.01_fA.parquet" in left
-    assert "pre_s1_sf0.01_fZ.parquet" not in left
+    assert before - left == {f"chunk_emb_{c0}_perfbench_curate_{fb}.parquet"}
 
 
 def test_source_fingerprint_tracks_data_changes(tmp_path):
     """Memo keys must change when the source parquet changes in place or
     moves — same-basename corpora can never serve each other's memos."""
-    from docling_rag_spark.operators.extraction_queries import source_fingerprint
+    from docling_rag_spark.artifacts import source_fingerprint
 
     a = tmp_path / "x" / "sf0.01"
     b = tmp_path / "y" / "sf0.01"
@@ -787,17 +794,36 @@ def test_source_fingerprint_tracks_data_changes(tmp_path):
         d.mkdir(parents=True)
         (d / "documents.parquet").write_bytes(b"pq1")
     f_a0 = source_fingerprint(str(a))
-    assert f_a0 != source_fingerprint(str(b)) or (
-        # same sizes CAN collide only if mtime_ns also matches — rewrite b
-        # to force a content change and require divergence
-        False
-    )
+    assert f_a0 != source_fingerprint(str(b))
     # regenerate in place -> fingerprint changes
     import time
 
     time.sleep(0.01)
     (a / "documents.parquet").write_bytes(b"pq2-regenerated")
     assert source_fingerprint(str(a)) != f_a0
+
+
+def test_same_basename_corpora_get_their_own_rows(spark, tmp_path, monkeypatch):
+    """Two source dirs sharing a basename (/a/sf0.001 vs /b/sf0.001) must
+    each derive their own corpus: the corpus memo is keyed on the source
+    fingerprint like every other artifact, never on the basename alone."""
+    import pyarrow.parquet as pq
+
+    from docling_rag_spark import artifacts
+    from docling_rag_spark.sources.corpus import corpus_for_sf
+
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path / "store"))
+    docs = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    want = {}
+    for parent, start in (("a", 0), ("b", 5)):
+        d = tmp_path / parent / "sf0.001"
+        d.mkdir(parents=True)
+        part = docs.slice(start, 5)
+        pq.write_table(part, str(d / "documents.parquet"))
+        want[str(d)] = sorted(str(x) for x in part.column("doc_id").to_pylist())
+    for sf_dir, ids in want.items():
+        got = sorted(r["doc_id"] for r in corpus_for_sf(spark, sf_dir).collect())
+        assert got == ids, (sf_dir, got, ids)
 
 
 def test_pack_sequences_plan_bucketed_not_global(spark):

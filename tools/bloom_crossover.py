@@ -16,7 +16,7 @@ budget. This tool makes that regime measurable without 100 TB:
      (2^20 bits) no matter how large the eval set; the exact path's build
      side exceeds the budget, so its training grams must shuffle;
   3. report wall + ACTUAL shuffle bytes/records per operator via the
-     status REST API (same method as tools/shuffle_bytes.py).
+     status REST API (the Spark UI's per-stage shuffle write totals).
 
 Usage: python tools/bloom_crossover.py [R] [cores]   (default R=16 cores=16)
 """

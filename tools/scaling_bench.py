@@ -36,18 +36,20 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 RUNNER = r"""
 import json, statistics, sys, time
 sys.path.insert(0, "{repo}")
+from bench import materialize_bench_corpus
 from docling_rag_spark.session import get_spark
 from docling_rag_spark.pipeline import run_extraction
 
 cores = int(sys.argv[1])
-corpus_path = sys.argv[2]
+sf_dir, mult = sys.argv[2], int(sys.argv[3])
 spark = get_spark(master=f"local[{{cores}}]", app_name=f"scale-{{cores}}")
 spark.sparkContext.setLogLevel("ERROR")
-corpus = spark.read.parquet(corpus_path)
+corpus = materialize_bench_corpus(spark, sf_dir, mult)
 n_docs = corpus.count()
 run_extraction(corpus.limit(64), run_id="warm")[0].count()
 walls = []
@@ -73,12 +75,14 @@ cores = int(sys.argv[1]); name = sys.argv[2]; sf_dir = sys.argv[3]
 spark = get_spark(master=f"local[{{cores}}]", app_name=f"qscale-{{cores}}")
 spark.sparkContext.setLogLevel("ERROR")
 from pyspark.sql import functions as F
-if name.startswith("select_chunks@"):
+if name.startswith("select_chunks_x"):
     # the flagship's selection core over a pre-materialized SCALED chunk
     # table (the sf-table chunk count is overhead-dominated at high cores)
+    sys.path.insert(0, "{repo}/tools")
+    from scaling_bench import scaled_chunks
     from docling_rag_spark.operators.training_set import select_training_chunks
-    path = name.split("@", 1)[1]
-    fn = lambda: select_training_chunks(spark.read.parquet(path))
+    chunks = scaled_chunks(spark, sf_dir, int(name.rsplit("x", 1)[1]))
+    fn = lambda: select_training_chunks(chunks)
 elif name.startswith("cc@"):
     # the iterative CC core over a generated chain graph (64-node chains:
     # pointer jumping needs ~log2(64) rounds — exercises the iteration
@@ -129,49 +133,50 @@ def run_query_level(cores: int, name: str, sf_dir: str) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def _materialize_scaled_chunks(sf_dir: str, mult: int) -> str:
-    """Chunk table of the ×mult bench corpus (run once, shared by levels)."""
-    # v2: replica fold multiplier 997 (see below); v1 tables are stale
-    out = str(REPO / "data" / f"scale_chunks_v2_{os.path.basename(os.path.normpath(sf_dir))}_x{mult}.parquet")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    sys.path.insert(0, str(REPO))
-    from bench import materialize_bench_corpus
-    from docling_rag_spark.pipeline import run_extraction
-    from docling_rag_spark.session import get_spark
-
-    spark = get_spark(master="local[16]", app_name="scale-chunk-prep")
-    spark.sparkContext.setLogLevel("ERROR")
-    corpus_path = materialize_bench_corpus(spark, sf_dir, mult, str(REPO / "data"))
-    corpus = spark.read.parquet(corpus_path)
-    _, chunks, _ = run_extraction(corpus, run_id="scale-prep")
-    # numeric-castable doc ids: the holdout rule is doc_id % 50, and the
-    # bench corpus suffixes replicas as '<id>#<rep>' — fold the rep into a
-    # distinct numeric id so every selection stage sees realistic ids.
-    # Fold multiplier must be COPRIME to DECON_EVAL_MOD (50): with the
-    # original 1000, (base*1000+rep) % 50 == rep % 50, so the eval slice
-    # degenerated to "replica #0 of EVERY base doc" — verbatim copies of
-    # all training replicas' text — and decontamination flagged
-    # essentially the whole corpus (a worst-case join, not realistic
-    # selection). 997 is prime: the eval slice is a ~1/50 spread of
-    # (base, rep) combinations.
+def scaled_chunks(spark, sf_dir: str, mult: int):
+    """Chunk table of the ×mult bench corpus (built once, shared by levels)."""
     from pyspark.sql import functions as F
 
-    chunks = chunks.withColumn(
-        "doc_id",
-        (F.split("doc_id", "#")[0].cast("bigint") * 997
-         + F.coalesce(F.split("doc_id", "#")[1].cast("bigint"), F.lit(0))
-         ).cast("string"),
-    )
-    chunks.repartition(64).write.mode("overwrite").parquet(out)
+    from bench import materialize_bench_corpus
+    from docling_rag_spark import artifacts
+    from docling_rag_spark.pipeline import run_extraction
+
+    def build():
+        corpus = materialize_bench_corpus(spark, sf_dir, mult)
+        _, chunks, _ = run_extraction(corpus, run_id="scale-prep")
+        # numeric-castable doc ids: the holdout rule is doc_id % 50, and
+        # the bench corpus suffixes replicas as '<id>#<rep>' — fold the rep
+        # into a distinct numeric id so every selection stage sees
+        # realistic ids. Fold multiplier must be COPRIME to DECON_EVAL_MOD
+        # (50): with the original 1000, (base*1000+rep) % 50 == rep % 50,
+        # so the eval slice degenerated to "replica #0 of EVERY base doc" —
+        # verbatim copies of all training replicas' text — and
+        # decontamination flagged essentially the whole corpus (a
+        # worst-case join, not realistic selection). 997 is prime: the
+        # eval slice is a ~1/50 spread of (base, rep) combinations.
+        return chunks.withColumn(
+            "doc_id",
+            (F.split("doc_id", "#")[0].cast("bigint") * 997
+             + F.coalesce(F.split("doc_id", "#")[1].cast("bigint"), F.lit(0))
+             ).cast("string"),
+        ).repartition(64)
+
+    return artifacts.parquet(spark, f"scale_chunks_x{mult}", sf_dir, build)
+
+
+def _prepare(memo, sf_dir: str, mult: int) -> None:
+    """Build a memo the levels share once, outside any timed level."""
+    from docling_rag_spark.session import get_spark
+
+    spark = get_spark(master="local[8]", app_name="scale-prep")
+    spark.sparkContext.setLogLevel("ERROR")
+    memo(spark, sf_dir, mult)
     spark.stop()
-    return out
 
 
 def query_mode(name: str, sf_dir: str, pairs: list[tuple[int, int]]) -> None:
     if name.startswith("select_chunks_x"):
-        mult = int(name.rsplit("x", 1)[1])
-        name = f"select_chunks@{_materialize_scaled_chunks(sf_dir, mult)}"
+        _prepare(scaled_chunks, sf_dir, int(name.rsplit("x", 1)[1]))
     for n_lo, n_hi in pairs:
         control = cpu_control((n_lo, n_hi))
         lo = run_query_level(n_lo, name, sf_dir)
@@ -184,10 +189,10 @@ def query_mode(name: str, sf_dir: str, pairs: list[tuple[int, int]]) -> None:
         }, indent=2))
 
 
-def run_level(cores: int, corpus_path: str) -> dict:
+def run_level(cores: int, sf_dir: str, mult: int) -> dict:
     script = RUNNER.format(repo=str(REPO))
     out = subprocess.run(
-        [sys.executable, "-c", script, str(cores), corpus_path],
+        [sys.executable, "-c", script, str(cores), sf_dir, str(mult)],
         capture_output=True,
         text=True,
         timeout=1800,
@@ -247,20 +252,15 @@ def main() -> None:
     pairs = [(4, 16), (8, 32)]
     if len(sys.argv) > 4:
         pairs = [(int(sys.argv[3]), int(sys.argv[4]))]
-    sys.path.insert(0, str(REPO))
-    from docling_rag_spark.session import get_spark
     from bench import materialize_bench_corpus
 
-    spark = get_spark(master="local[8]", app_name="scale-prep")
-    spark.sparkContext.setLogLevel("ERROR")
-    corpus_path = materialize_bench_corpus(spark, sf_dir, mult, str(REPO / "data"))
-    spark.stop()
+    _prepare(materialize_bench_corpus, sf_dir, mult)
 
     results = []
     for n_lo, n_hi in pairs:
         control = cpu_control((n_lo, n_hi))
-        lo = run_level(n_lo, corpus_path)
-        hi = run_level(n_hi, corpus_path)
+        lo = run_level(n_lo, sf_dir, mult)
+        hi = run_level(n_hi, sf_dir, mult)
         eff = round((hi["docs_per_sec"] / lo["docs_per_sec"]) / (n_hi / n_lo), 3)
         results.append(
             {"pair": (n_lo, n_hi), "lo": lo, "hi": hi, "eff": eff,
