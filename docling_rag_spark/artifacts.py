@@ -29,7 +29,7 @@ import warnings
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.errors import AnalysisException, PySparkException
+from pyspark.errors import AnalysisException, PySparkException, PythonException
 from pyspark.sql import DataFrame, SparkSession
 
 _PKG = Path(__file__).resolve().parent
@@ -85,7 +85,9 @@ def parquet(
     Only the build is guarded: when the root cannot be created or written,
     or the write fails at the storage level, a warning names the memo and
     the live ``build()`` plan is returned (correct, but every call
-    re-executes it). Anything ``build()`` itself raises propagates."""
+    re-executes it). Anything ``build()`` itself raises propagates, and so
+    does a Python error raised while its plan runs; a failed write leaves
+    no artifact directory behind."""
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     out = os.path.join(
         ROOT, f"{name}_{_code_hash()}_{tag}_{source_fingerprint(sf_dir)}.parquet"
@@ -101,7 +103,10 @@ def parquet(
     if writable:
         try:
             df.write.mode("overwrite").parquet(out)
-        except (OSError, AnalysisException, PySparkException):
+        except (OSError, AnalysisException, PySparkException) as e:
+            shutil.rmtree(out, ignore_errors=True)
+            if isinstance(e, PythonException):
+                raise  # the plan failed, not the storage
             writable = False
     if not writable:
         warnings.warn(

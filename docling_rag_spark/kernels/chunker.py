@@ -4,11 +4,10 @@ Reference semantics: HybridChunker walks the doc tree in reading order with
 heading context, packs items into <=512-token chunks, and merges undersized
 *adjacent* peers sharing headings (reference src/ingestion/chunker.py:16-27,
 max_tokens src/config.py:34). Re-specified here as a deterministic
-single-pass greedy packer. Both Spark kernels share :class:`ChunkPacker`
-with this oracle, and tests assert equality: the narrow extraction kernel
-(pipeline._extract_kernel) packs each whole document in-kernel, and the
-spread path's chunker (pipeline._chunk_kernel) packs ordered spans after a
-doc_id exchange.
+single-pass greedy packer. The pipeline's kernels share :class:`ChunkPacker`
+with this oracle through one emitter (pipeline._Emitter), and tests assert
+equality: the narrow extraction kernel packs each whole document, and
+spread's stitch kernel packs a document's blocks after a doc_id exchange.
 
 Frozen spec v2:
 - chunkable spans: kind in {heading, text, table} with non-empty text,
@@ -97,7 +96,7 @@ def chunk_document(
     max_tokens: int = MAX_TOKENS,
 ) -> list[dict]:
     """spans: [(order, kind, text, media_ref, page_num)] (any order; sorted
-    by `order` here) → chunk dicts matching pipeline.chunk_spans columns."""
+    by `order` here) → chunk dicts matching the pipeline's chunks columns."""
     packer = ChunkPacker(max_tokens)
     for order, kind, text, _ref, page in sorted(spans, key=lambda s: s[0]):
         packer.add(kind, text, page)

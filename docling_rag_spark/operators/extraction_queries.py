@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
-from ..pipeline import chunk_spans, doc_metadata, run_extraction
+from ..pipeline import doc_metadata, run_extraction
 from ..sources.corpus import corpus_for_sf
 
 
@@ -43,11 +43,12 @@ def extract_chunks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunks as a disk memo of their own (not just the spans prefix):
     consumers like training_subset_chunks reference the chunk table from
     4-5 plan branches, and without the memo EVERY branch re-runs the
-    chunker shuffle + Arrow packer (measured: the dominant cost of the
+    extraction kernel and its packer (measured: the dominant cost of the
     chunk flagship at sf0.1). With it each branch is a parquet scan with
     pushdown — the exact shape of reading the production chunks table."""
     return artifacts.parquet(
-        spark, "chunks", sf_dir, lambda: chunk_spans(_extracted(spark, sf_dir))
+        spark, "chunks", sf_dir,
+        lambda: run_extraction(corpus_for_sf(spark, sf_dir))[1],
     )
 
 

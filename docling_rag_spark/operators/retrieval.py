@@ -551,7 +551,7 @@ group by n_name
 
 # --------------------------------------------------------------------------
 # E11-E13 in pure SQL: fixed-budget word chunker with the exact md5 id
-# recipe (oracle-checkable flat-text variant of pipeline.chunk_spans)
+# recipe (oracle-checkable flat-text variant of the pipeline's chunks)
 # --------------------------------------------------------------------------
 def chunk_documents_sql_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")

@@ -16,26 +16,27 @@ and lineage):
          one lineage sentinel row per kernel row)
       → blocks, chunks (+ md5 id) and lineage are filters of that output
 
-SPREAD (giant-document skew defuse — the north-rule salting path):
+SPREAD (giant-document skew defuse — the north-rule salting path; two
+Python stages, one doc_id shuffle):
     … → sort spans into reading order → cut into slices of at most
     SPREAD_SLICE_SPANS spans (one kernel row each, ``part`` = slice rank)
     → optional round-robin repartition (a giant's slices spread over all
-    tasks) → the same kernel → one window over doc_id ordered by
-    (part, order) → chunk assembly (a slice is not a whole document):
-    doc_id exchange → streaming ChunkPacker; lineage = groupBy over the
-    slice sentinels
+    tasks) → the same kernel, without chunking (a slice is not a whole
+    document) → doc_id exchange, slice sentinels first, blocks by
+    (part, order) → mapInPandas(stitch kernel): renumbered blocks,
+    ChunkPacker chunks and one sentinel per document — narrow's rows
 
 METADATA (doc_metadata, one shuffle):
     union by name of (doc_id, doc_type) from the input scan (span kinds
     only — nested-schema pruning), (doc_id, first-chunk text, n_tokens)
     from the chunks and (doc_id, page_num) from the extracted spans
       → one groupBy(doc_id) rollup → language of the first chunk
-    With persist_blocks=True the kernel output (and, in spread mode, the
-    chunks) is cached, so no Python kernel re-runs for it.
+    With persist_blocks=True the kernel output is cached, so no Python
+    kernel re-runs for it.
 
 Scale notes (100 TB):
 - Extraction is embarrassingly parallel per document → narrow is default;
-  spread's repartition + ordering window shuffle every payload byte and
+  spread's repartition and doc_id exchange shuffle every payload byte and
   sort the extracted text (measured shuffle-I/O-bound at any core count).
   Pick spread only when single documents are large enough to straggle a
   task (SURVEY.md §7.3 #3).
@@ -52,10 +53,11 @@ from functools import partial
 from typing import TYPE_CHECKING
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.text import detect_language_col
+from .kernels.chunker import ChunkPacker
 from .kernels.extract import extract_span
 
 
@@ -73,6 +75,10 @@ SPREAD_SLICE_SPANS = 64
 # --------------------------------------------------------------------------
 # the extraction kernel (mapInPandas) — both modes run it
 # --------------------------------------------------------------------------
+_KERNEL_COLS = (
+    "doc_id", "part", "order", "kind", "text", "media_ref", "page_num",
+    "n_tokens", "error", "n_spans_in", "partition_id",
+)
 _KERNEL_SCHEMA = (
     "doc_id string, part int, order int, kind string, text string, "
     "media_ref string, page_num int, n_tokens int, error string, "
@@ -80,50 +86,81 @@ _KERNEL_SCHEMA = (
 )
 
 
+class _Emitter:
+    """A kernel's output rows, as column lists flushed to pandas.
+
+    Per document: :meth:`open`, :meth:`block` for each block in reading
+    order (``order`` counts from 0; with ``chunk``, ChunkPacker(MAX_TOKENS)
+    packs it), then :meth:`close`: the chunks (kind='__chunk', ``order`` =
+    chunk_index, the only rows with ``n_tokens``) and one sentinel
+    (kind='__doc') carrying lineage — the error, and the block count in
+    ``order``. A failed document is closed with its error and no blocks:
+    its sentinel is its only row.
+    """
+
+    def __init__(self, chunk: bool) -> None:
+        self.chunk = chunk
+        self.out: dict[str, list] = {k: [] for k in _KERNEL_COLS}
+
+    def open(self, doc_id, part, n_in, pid) -> None:
+        self.doc_id, self.part, self.n_in, self.pid = doc_id, part, n_in, pid
+        self.n = 0
+        self.packer = ChunkPacker(MAX_TOKENS) if self.chunk else None
+
+    def _row(self, order, kind, text, ref, page, n_tok=None, err=None) -> None:
+        out = self.out
+        out["doc_id"].append(self.doc_id)
+        out["part"].append(self.part)
+        out["order"].append(order)
+        out["kind"].append(kind)
+        out["text"].append(text)
+        out["media_ref"].append(ref)
+        out["page_num"].append(page)
+        out["n_tokens"].append(n_tok)
+        out["error"].append(err)
+        out["n_spans_in"].append(self.n_in)
+        out["partition_id"].append(self.pid)
+
+    def block(self, kind, text, ref, page) -> None:
+        self._row(self.n, kind, text, ref, page)
+        self.n += 1
+        if self.packer is not None:
+            self.packer.add(kind, text, page)
+
+    def close(self, err) -> None:
+        if self.packer is not None:
+            for c in self.packer.finish():
+                self._row(c["chunk_index"], "__chunk", c["text"], None, c["page_num"],
+                          c["n_tokens"])
+        self._row(self.n, "__doc", None, None, None, err=err)
+
+    def flush(self) -> "pd.DataFrame":
+        import pandas as pd
+
+        out = pd.DataFrame(self.out)
+        self.out = {k: [] for k in _KERNEL_COLS}
+        return out
+
+
 def _extract_kernel(
     batches: Iterator["pd.DataFrame"], chunk: bool = False
 ) -> Iterator["pd.DataFrame"]:
-    """One input row (doc_id, part, n_spans_in, spans[]) → three record
-    kinds:
+    """One input row (doc_id, part, n_spans_in, spans[]) → its _Emitter
+    rows: blocks, chunks with ``chunk`` (narrow: the row is a whole
+    document), then the sentinel.
 
-    * its blocks in reading order (``order`` 0-based within the row);
-    * with ``chunk`` (narrow: the row is a whole document), its chunks —
-      kind='__chunk', ``order`` = chunk_index, text / page_num / n_tokens
-      from ChunkPacker(MAX_TOKENS) over those blocks;
-    * last, one sentinel (kind='__doc') carrying lineage: the error and the
-      block count (in ``order``).
-
-    ``n_tokens`` is null except on chunk rows. The span traversal is the
-    oracle's (kernels.extract.extract_document_oracle), with per-span
-    errors promoted to row failure: a failing row emits ONLY its sentinel
-    (no blocks, no chunks) — the reference's DocumentLoadError taxonomy
+    The span traversal is the oracle's
+    (kernels.extract.extract_document_oracle), with per-span errors
+    promoted to row failure: a failing row emits ONLY its sentinel — the
+    reference's DocumentLoadError taxonomy
     (src/ingestion/document.py:191-203) as dead-letter data instead of a
     failed task.
     """
-    import pandas as pd
     from pyspark import TaskContext
 
-    from .kernels.chunker import ChunkPacker
-
     pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-    cols = ("doc_id", "part", "order", "kind", "text", "media_ref", "page_num",
-            "n_tokens", "error", "n_spans_in", "partition_id")
+    em = _Emitter(chunk)
     for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-
-        def emit(doc_id, part, order, kind, text, ref, page, err, n_in, n_tok=None):
-            out["doc_id"].append(doc_id)
-            out["part"].append(part)
-            out["order"].append(order)
-            out["kind"].append(kind)
-            out["text"].append(text)
-            out["media_ref"].append(ref)
-            out["page_num"].append(page)
-            out["n_tokens"].append(n_tok)
-            out["error"].append(err)
-            out["n_spans_in"].append(n_in)
-            out["partition_id"].append(pid)
-
         for doc_id, part, n_in, spans in zip(
             pdf["doc_id"], pdf["part"], pdf["n_spans_in"], pdf["spans"]
         ):
@@ -146,20 +183,52 @@ def _extract_kernel(
                         break
             except Exception:
                 err = traceback.format_exc(limit=2)
+            em.open(doc_id, part, n_in, pid)
             if err is None:
-                for order, (kind, text, ref, page) in enumerate(blocks):
-                    emit(doc_id, part, order, kind, text, ref, page, None, n_in)
-                if chunk:
-                    packer = ChunkPacker(MAX_TOKENS)
-                    for kind, text, _ref, page in blocks:
-                        packer.add(kind, text, page)
-                    for c in packer.finish():
-                        emit(doc_id, part, c["chunk_index"], "__chunk", c["text"], None,
-                             c["page_num"], None, n_in, c["n_tokens"])
-                emit(doc_id, part, len(blocks), "__doc", None, None, None, None, n_in)
-            else:
-                emit(doc_id, part, 0, "__doc", None, None, None, err, n_in)
-        yield pd.DataFrame(out)
+                for kind, text, ref, page in blocks:
+                    em.block(kind, text, ref, page)
+            em.close(err)
+        yield em.flush()
+
+
+def _stitch_kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    """Spread's back end: per-slice kernel output, clustered by doc_id and
+    sorted so each document's slice sentinels come first (by ``part``),
+    then its blocks by (part, order) → the rows _extract_kernel emits for
+    the whole document (``part`` 0).
+
+    The sentinels settle the lineage before any block arrives: the first
+    failing slice's error, and the lowest kernel ``partition_id`` (every
+    slice carries the document's ``n_spans_in``). The blocks then stream
+    through the emitter — renumbered, packed, closed by one sentinel — or
+    are dropped if the document failed. Nothing is buffered per document,
+    and the output is flushed every 8192 rows.
+    """
+    import pandas as pd
+
+    em = _Emitter(chunk=True)
+    cur = unset = object()  # the open document's doc_id
+    err = None
+    for pdf in batches:
+        for doc_id, kind, text, ref, page, e, n_in, pid in zip(
+            pdf["doc_id"], pdf["kind"], pdf["text"], pdf["media_ref"],
+            pdf["page_num"], pdf["error"], pdf["n_spans_in"], pdf["partition_id"],
+        ):
+            if doc_id != cur:  # a document's first row: its first sentinel
+                if cur is not unset:
+                    em.close(err)
+                cur, err = doc_id, e
+                em.open(doc_id, 0, n_in, pid)
+            elif kind == "__doc":
+                err = e if err is None else err
+                em.pid = min(em.pid, pid)
+            elif err is None:
+                em.block(kind, text, ref, None if pd.isna(page) else int(page))
+        if len(em.out["doc_id"]) >= 8192:  # bound kernel memory on huge partitions
+            yield em.flush()
+    if cur is not unset:
+        em.close(err)
+    yield em.flush()
 
 
 def _document_rows(docs: DataFrame) -> DataFrame:
@@ -230,123 +299,6 @@ def extract_documents_spread(
     if repartition_to:
         rows = rows.repartition(repartition_to)
     return rows.mapInPandas(_extract_kernel, schema=_KERNEL_SCHEMA)
-
-
-def order_spans(raw: DataFrame) -> DataFrame:
-    """Spread kernel output → the FIXTURES.md F2 output: 0-based total
-    order per doc, failed documents dropped.
-
-    One window (one doc_id exchange) does both: rows sort by
-    (part, order), where each slice's sentinel sorts last in its slice, so
-    a block's document order is its row number minus the sentinels of
-    earlier slices (= part). Failed-document exclusion is a window max over
-    the same spec — NOT an anti-join against an error branch: a
-    self-referencing join re-executes the whole kernel per branch
-    (measured 2× kernel cost per job).
-    """
-    w = Window.partitionBy("doc_id").orderBy("part", "order")
-    return (
-        raw.select(
-            "*",
-            (F.row_number().over(w) - 1 - F.col("part")).alias("_order"),
-            F.max(F.col("error").isNotNull().cast("int"))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-            .alias("_failed"),
-        )
-        .filter((F.col("_failed") == 0) & (F.col("kind") != "__doc"))
-        .select(
-            "doc_id",
-            F.col("_order").alias("order"),
-            "kind",
-            "text",
-            "media_ref",
-            "page_num",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# chunk assembly over ordered spans (heading-aware greedy packing — frozen
-# spec v2, kernels/chunker.py) — the spread path's chunker; narrow packs
-# in-kernel. Greedy packing with heading resets is sequentially dependent
-# per document, which windows cannot express (prefix-sum binning — the v1
-# spec — let chunks exceed max_tokens when a span straddled a boundary).
-# Physical shape: ONE hash shuffle on doc_id + in-partition sort, then a
-# single-pass Arrow kernel that streams state across batch boundaries.
-# --------------------------------------------------------------------------
-_CHUNK_SCHEMA = (
-    "doc_id string, chunk_index int, text string, page_num int, n_tokens int"
-)
-
-
-def _chunk_kernel(
-    batches: Iterator["pd.DataFrame"], max_tokens: int = MAX_TOKENS
-) -> Iterator["pd.DataFrame"]:
-    """Per-partition streaming packer: input rows arrive clustered by doc_id
-    and sorted by (doc_id, order); ChunkPacker state carries a document
-    across Arrow batch boundaries (a giant doc never needs to fit one
-    batch)."""
-    import pandas as pd
-
-    from .kernels.chunker import ChunkPacker
-
-    cols = ("doc_id", "chunk_index", "text", "page_num", "n_tokens")
-    out: dict[str, list] = {k: [] for k in cols}
-    cur_doc, packer = None, None
-
-    def finish_doc() -> None:
-        if packer is None:
-            return
-        for c in packer.finish():
-            out["doc_id"].append(cur_doc)
-            out["chunk_index"].append(c["chunk_index"])
-            out["text"].append(c["text"])
-            out["page_num"].append(c["page_num"])
-            out["n_tokens"].append(c["n_tokens"])
-
-    for pdf in batches:
-        for doc_id, kind, text, page in zip(
-            pdf["doc_id"], pdf["kind"], pdf["text"], pdf["page_num"]
-        ):
-            if doc_id != cur_doc:
-                finish_doc()
-                cur_doc, packer = doc_id, ChunkPacker(max_tokens)
-            packer.add(kind, text, None if pd.isna(page) else int(page))
-        if len(out["doc_id"]) >= 8192:  # bound kernel memory on huge partitions
-            yield pd.DataFrame(out)
-            out = {k: [] for k in cols}
-    finish_doc()
-    yield pd.DataFrame(out)
-
-
-def chunk_spans(extracted: DataFrame, max_tokens: int = MAX_TOKENS) -> DataFrame:
-    """Ordered spans → chunks table (reference HybridChunker semantics:
-    heading-aware greedy packing — SURVEY.md §2.2 E11-E13; frozen spec v2 in
-    kernels/chunker.py, shared with the single-process oracle).
-    run_extraction uses it in spread mode; narrow packs in-kernel.
-
-    Only chunkable spans (kind/text filter pushed to the scan) are shuffled;
-    id = md5('{doc_id}_{chunk_index}_{text}') stays a codegen expression.
-    """
-    chunkable = extracted.filter(
-        F.col("kind").isin("heading", "text", "table")
-        & F.col("text").isNotNull()
-        & (F.length("text") > 0)
-    ).select("doc_id", "order", "kind", "text", "page_num")
-    clustered = chunkable.repartition("doc_id").sortWithinPartitions(
-        "doc_id", "order"
-    )
-    kernel = partial(_chunk_kernel, max_tokens=max_tokens)
-    return _with_chunk_id(clustered.mapInPandas(kernel, schema=_CHUNK_SCHEMA))
-
-
-def _with_chunk_id(chunks: DataFrame) -> DataFrame:
-    """id = md5('{doc_id}_{chunk_index}_{text}') — the reference recipe
-    (src/ingestion/chunker.py:49) as a codegen expression."""
-    return chunks.withColumn(
-        "id",
-        F.md5(F.concat_ws("_", F.col("doc_id"), F.col("chunk_index"), F.col("text"))),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -462,12 +414,12 @@ def run_extraction(
     Modes (one kernel; both produce IDENTICAL output — tested):
     * ``narrow`` (default): one kernel row per document, ordering and
       chunking in-kernel, ZERO shuffles for extraction, chunks and
-      lineage. Extraction is
-      embarrassingly parallel per document; at 100 TB the shuffle the
-      spread path pays on every raw payload byte is the bottleneck, so
-      narrow is the default.
+      lineage. Extraction is embarrassingly parallel per document; at
+      100 TB the shuffle the spread path pays on every raw payload byte is
+      the bottleneck, so narrow is the default.
     * ``spread``: one kernel row per reading-order slice of
-      SPREAD_SLICE_SPANS spans → window re-ordering. Use when giant
+      SPREAD_SLICE_SPANS spans, then one doc_id exchange into the stitch
+      kernel, which emits narrow's rows per document. Use when giant
       documents (10^2-10^3× median) would straggle a narrow task — the
       north-rule skew defuse: one doc's slices spread over many tasks.
 
@@ -477,15 +429,12 @@ def run_extraction(
     the parallelism (a many-file table at 100 TB is already well-split;
     shuffling every raw payload byte would dominate the job).
 
-    ``persist_blocks=True`` caches (MEMORY_AND_DISK) — use it when
-    materializing more than one of the outputs in the same job batch (e.g.
-    extract_job, the streaming sink), so the Python kernels run once (in
-    whichever sink comes first):
-    * narrow caches ONE frame, the kernel output: extracted, chunks and
-      lineage are all filters of it, and doc_metadata reads it too;
-    * spread caches TWO: the kernel output, and the chunks, whose doc_id
-      exchange, sort and packer run after the ordering window.
-    ``release_extraction(lineage)`` drops the caches when the batch is
+    ``persist_blocks=True`` caches the kernel output (MEMORY_AND_DISK):
+    extracted, chunks and lineage are all filters of that one frame, and
+    doc_metadata reads it too, so the Python kernels run once (in whichever
+    sink comes first) — use it when materializing more than one output in
+    the same job batch (e.g. extract_job, the streaming sink).
+    ``release_extraction(lineage)`` drops the cache when the batch is
     written.
 
     * ``auto``: probe the per-doc span-count distribution and pick for you
@@ -507,62 +456,45 @@ def run_extraction(
             todo = todo.repartition(repartition_to)
         raw = extract_documents_narrow(todo)
     elif mode == "spread":
-        raw = extract_documents_spread(todo, repartition_to)
+        # one doc_id cluster; each document's slice sentinels sort first
+        raw = (
+            extract_documents_spread(todo, repartition_to)
+            .repartition("doc_id")
+            .sortWithinPartitions("doc_id", F.col("kind") != "__doc", "part", "order")
+            .mapInPandas(_stitch_kernel, schema=_KERNEL_SCHEMA)
+        )
     else:
         raise ValueError(f"unknown mode {mode!r} (narrow|spread|auto)")
     if persist_blocks:
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-    sentinels = raw.filter(F.col("kind") == "__doc")
-    if mode == "narrow":
-        extracted = raw.filter(~F.col("kind").isin("__doc", "__chunk")).select(
-            "doc_id", "order", "kind", "text", "media_ref", "page_num"
-        )
-        chunks = _with_chunk_id(
-            raw.filter(F.col("kind") == "__chunk").select(
-                "doc_id", F.col("order").alias("chunk_index"), "text", "page_num",
-                "n_tokens",
-            )
-        )
-        cached = (raw,)
-    else:
-        extracted = order_spans(raw)
-        # one row per document: the error of the first failing slice in
-        # reading order, the summed block count
-        sentinels = sentinels.groupBy("doc_id").agg(
-            F.min("partition_id").alias("partition_id"),
-            F.min_by("error", F.when(F.col("error").isNotNull(), F.col("part")))
-            .alias("error"),
-            F.max("n_spans_in").alias("n_spans_in"),
-            F.sum("order").alias("order"),
-        )
-        # a slice is not a whole document: chunk after the ordering window
-        chunks = chunk_spans(extracted)
-        if persist_blocks:
-            chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = (raw, chunks)
-    lineage = sentinels.select(
+    extracted = raw.filter(~F.col("kind").isin("__doc", "__chunk")).select(
+        "doc_id", "order", "kind", "text", "media_ref", "page_num"
+    )
+    chunks = raw.filter(F.col("kind") == "__chunk").select(
+        "doc_id", F.col("order").alias("chunk_index"), "text", "page_num", "n_tokens",
+        # the reference id recipe (src/ingestion/chunker.py:49)
+        F.md5(F.concat_ws("_", "doc_id", "order", "text")).alias("id"),
+    )
+    lineage = raw.filter(F.col("kind") == "__doc").select(
         F.lit(run_id).alias("run_id"),
         "partition_id",
         "doc_id",
         F.when(F.col("error").isNull(), "processed").otherwise("failed").alias("status"),
         "error",
         "n_spans_in",
-        # failed docs report 0 blocks: they emit no output rows
-        F.when(F.col("error").isNull(), F.col("order"))
-        .otherwise(0)
-        .cast("long")
-        .alias("n_blocks_out"),
+        # a failed document's sentinel counts 0 blocks: it emitted none
+        F.col("order").cast("long").alias("n_blocks_out"),
         _run_ts_col(run_ts).alias("ingested_at"),
     )
     if persist_blocks:
-        lineage._cached = cached  # what release_extraction unpersists
+        lineage._cached = (raw,)  # what release_extraction unpersists
     return extracted, chunks, lineage
 
 
 def release_extraction(lineage: DataFrame) -> None:
-    """Unpersist exactly the frames ``run_extraction(persist_blocks=True)``
+    """Unpersist exactly the frame ``run_extraction(persist_blocks=True)``
     cached for the batch whose ``lineage`` frame it returned (the kernel
-    output, plus the chunks in spread mode) — for a caller that runs many
+    output) — for a caller that runs many
     batches in one session, so they do not accumulate. A no-op for an
     uncached run."""
     for df in getattr(lineage, "_cached", ()):

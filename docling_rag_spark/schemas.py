@@ -47,21 +47,6 @@ EXTRACTED_SPANS_SCHEMA = StructType(
     ]
 )
 
-# intermediate: one row per extracted block, pre-ordering (kernel output)
-BLOCKS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("offset", IntegerType()),
-        StructField("span_idx", IntegerType()),
-        StructField("block_seq", IntegerType()),
-        StructField("kind", StringType()),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("page_num", IntegerType()),
-        StructField("error", StringType()),
-    ]
-)
-
 # persisted chunks table (reference docker/init.sql:6-18; FIXTURES.md F3)
 CHUNKS_SCHEMA = StructType(
     [

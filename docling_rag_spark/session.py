@@ -52,8 +52,12 @@ def get_spark(
     default_cpus, default_mem = _host_defaults()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", default_cpus)
     master = master or f"local[{cpus}]"
+    # the master's cores: N of local[N] / local[N,F], 1 for bare local
+    if "[" in master:
+        n = master[master.find("[") + 1 : master.find("]")].split(",")[0]
+    else:
+        n = "1" if master == "local" else cpus
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
     b = (
         SparkSession.builder.master(master)
@@ -69,10 +73,10 @@ def get_spark(
         # let AQE coalesce shuffles inside cached plans too (Spark 4 default
         # false): any cached query plan with an exchange otherwise keeps all
         # shuffle.partitions. run_extraction(persist_blocks=True) in spread
-        # mode caches the chunks, whose doc_id exchange is one — measured
-        # when narrow cached them too, on a traced perfbench extract_full
-        # pass (4 cores): 52 tasks instead of 31 and the chunks sink's task
-        # time 3.3 s instead of 1.0-1.1 s
+        # mode caches the kernel output, whose doc_id exchange is one —
+        # measured when narrow cached an exchanged chunks frame, on a traced
+        # perfbench extract_full pass (4 cores): 52 tasks instead of 31 and
+        # the chunks sink's task time 3.3 s instead of 1.0-1.1 s
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
@@ -81,8 +85,9 @@ def get_spark(
         # Python-dominated extraction kernel thrashes (measured 24-77s vs
         # 12-15s at local[32] on the sf0.1×64 corpus). task.cpus=2 sizes
         # slots for the JVM+Python pair — the same setting a real cluster
-        # would ship via spark-submit --conf for this workload.
-        .config("spark.task.cpus", os.environ.get("SPARK_TASK_CPUS", "2"))
+        # would ship via spark-submit --conf for this workload. A 1-core
+        # master gets 1: a task may not ask for more cpus than it has.
+        .config("spark.task.cpus", str(min(2, int(default_cpus if n == "*" else n))))
         # parquet scans: keep splits small enough that one giant doc row
         # cannot pin a whole multi-GB split to one task at 100 TB
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -8,9 +8,9 @@ its session from the submit conf (it does not call session.get_spark), so
 ship get_spark's settings with it, including
 ``--conf spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``:
 without it AQE cannot coalesce the partitions of an exchange inside a
-cached plan. In spread mode run_extraction(persist_blocks=True) caches the
-chunks, whose doc_id exchange is one; narrow chunks in-kernel and caches
-only the kernel output.
+cached plan. run_extraction(persist_blocks=True) caches the kernel output
+in both modes; in spread mode that frame holds the doc_id exchange in
+front of the stitch kernel.
 
 Outputs under --output:
   extracted_spans/   ordered (doc_id, order, kind, text, media_ref, page_num)

@@ -83,10 +83,34 @@ EDGE_DOCS = [
 FAILED = {"malformed_pdf"}
 
 
+def _giant_doc(n_spans: int = 2600) -> list[dict]:
+    """A clean document of ``n_spans`` spans, in scrambled array order:
+    spread cuts it into ~41 slices, and its stitched rows (blocks, chunks)
+    cross several Arrow batches of 2048 rows. Paged MINIPDF headings and
+    plain text mix null and non-null page numbers in one batch."""
+    from docling_rag_spark.datagen import make_html, make_minipdf
+
+    spans = []
+    for o in range(n_spans):
+        if o % 400 == 7:
+            kind, text = "pdf", make_minipdf(f"g{o}", [f"pdf para {o} {i}" for i in range(4)],
+                                             pages=2, with_raster=False)
+        elif o % 150 == 3:
+            kind, text = "html", make_html(f"g{o}", [f"html para {o}"], with_table=True,
+                                           with_img=False)
+        else:
+            kind, text = "text", " ".join(f"w{o}x{i}" for i in range(o % 40 + 1))
+        spans.append({"kind": kind, "text": text, "media_ref": None, "offset": o * 10})
+    return spans[1::2] + spans[::2]
+
+
+EDGE_DOCS.append(("giant_clean", _giant_doc()))
+
+
 def test_edge_docs_narrow_spread_oracle_agree(spark):
-    """Narrow packs chunks in the extraction kernel, spread runs
-    chunk_spans after its ordering window: both must equal the
-    single-process oracle, blocks and chunks (ids included)."""
+    """Narrow packs chunks in the extraction kernel, spread in the stitch
+    kernel after its doc_id exchange: both must equal the single-process
+    oracle, blocks and chunks (ids included)."""
     docs = spark.createDataFrame(EDGE_DOCS, schema=DOCUMENTS_SPANS_SCHEMA)
 
     def seqs(mode, **kw):

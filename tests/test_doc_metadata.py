@@ -107,15 +107,19 @@ def test_doc_metadata_sink_plan_has_one_exchange(spark, tmp_path):
     assert scans and all("spans:array<struct<kind:string>>" in n for n in scans), plan
 
 
-def test_narrow_chunks_sink_plan_runs_one_python_stage(spark, tmp_path):
-    """Narrow mode packs the chunks inside the extraction kernel: the
-    chunks sink's whole plan, cached subtrees included, runs ONE Python
-    stage (the kernel) and ONE shuffle (the sink's key exchange), and
-    run_extraction caches one frame."""
+@pytest.mark.parametrize("mode, n_python, n_exchange", [
+    ("narrow", 1, 1),  # the kernel; the sink's key
+    ("spread", 2, 2),  # the slice kernel + the stitch; doc_id + the sink's key
+], ids=["narrow", "spread"])
+def test_chunks_sink_plan_caches_one_frame(spark, tmp_path, mode, n_python, n_exchange):
+    """Both modes pack the chunks inside a kernel, so the chunks sink's
+    whole plan, cached subtrees included, runs narrow's one Python stage
+    or spread's two, no shuffle beyond spread's doc_id cluster and the
+    sink's key exchange, and run_extraction caches one frame."""
     path = str(tmp_path / "docs")
     spark.createDataFrame(_corpus(), schema=DOCUMENTS_SPANS_SCHEMA).write.parquet(path)
     docs = spark.read.parquet(path)
-    _, chunks, lineage = run_extraction(docs, persist_blocks=True)
+    _, chunks, lineage = run_extraction(docs, mode=mode, persist_blocks=True)
     try:
         sink = chunks.dropDuplicates(["id"])
         plan = sink._jdf.queryExecution().executedPlan().toString()
@@ -123,6 +127,8 @@ def test_narrow_chunks_sink_plan_runs_one_python_stage(spark, tmp_path):
     finally:
         release_extraction(lineage)
     nodes = [line.lstrip(" :|+-") for line in plan.splitlines()]
-    assert sum("MapInPandas" in n for n in nodes) == 1, plan
-    assert sum(bool(re.match(r"(\*\(\d+\) )?\w*Exchange\b", n)) for n in nodes) == 1, plan
+    assert sum("MapInPandas" in n for n in nodes) == n_python, plan
+    assert sum(
+        bool(re.match(r"(\*\(\d+\) )?\w*Exchange\b", n)) for n in nodes
+    ) == n_exchange, plan
     assert n_cached == 1

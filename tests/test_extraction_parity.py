@@ -215,6 +215,11 @@ def test_lineage_parity_with_failures_and_nulls(spark):
         }
 
     narrow, spread = lin("narrow"), lin("spread")
+    # twofail's clean first slice emits blocks, but spread drops them: the
+    # failed document has no extracted or chunk rows at all
+    extracted, chunks, _ = run_extraction(docs, run_id="x", mode="spread", repartition_to=4)
+    assert extracted.filter("doc_id = 'twofail'").count() == 0
+    assert chunks.filter("doc_id = 'twofail'").count() == 0
     assert narrow == spread, (narrow, spread)
     assert narrow["faildoc"] == ("failed", "invalid minipdf payload", 3, 0)
     assert narrow["twofail"] == ("failed", "invalid minipdf payload", 3 * n, 0)

@@ -702,7 +702,7 @@ def test_memo_write_failure_warns_and_falls_back(spark, tmp_path, monkeypatch):
     silently re-running extraction per query is a perf cliff with no
     signal. Non-IO exceptions (a bug in the pipe) still propagate."""
     import pytest
-    from pyspark.errors import AnalysisException
+    from pyspark.errors import AnalysisException, PythonException
     from pyspark.sql.readwriter import DataFrameWriter
 
     from docling_rag_spark import artifacts
@@ -725,6 +725,23 @@ def test_memo_write_failure_warns_and_falls_back(spark, tmp_path, monkeypatch):
 
     with pytest.raises(ValueError, match="bug in the pipeline"):
         artifacts.parquet(spark, "memotest2", "/root/testdata/sf0.001", bad_pipe)
+
+    # nor is a plan that fails inside a Python UDF: it raises, and the
+    # half-written artifact directory is removed
+    monkeypatch.undo()
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path))
+
+    def udf_fails(batches):
+        for _ in batches:
+            raise ValueError("bug in a kernel")
+        yield from ()
+
+    with pytest.raises(PythonException, match="bug in a kernel"):
+        artifacts.parquet(
+            spark, "memotest3", "/root/testdata/sf0.001",
+            lambda: spark.range(3).mapInPandas(udf_fails, schema="id long"),
+        )
+    assert not list(tmp_path.glob("memotest3_*"))
 
 
 def test_stale_artifact_cleanup_scoping(tmp_path, monkeypatch):

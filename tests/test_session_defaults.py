@@ -70,3 +70,18 @@ def test_env_overrides_host_defaults(host, monkeypatch):
     assert conf["master"] == "local[16]"
     assert conf["spark.driver.memory"] == "2g"
     assert conf["spark.sql.shuffle.partitions"] == "16"
+
+
+@pytest.mark.parametrize(
+    "master, want",
+    [
+        (None, "2"),             # the host default, local[3]
+        ("local[1]", "1"),       # a 2-cpu task would not fit one core
+        ("local", "1"),
+        ("local[1,4]", "1"),     # local[N, maxFailures]
+        ("local[*]", "2"),
+        ("local[8]", "2"),
+    ],
+)
+def test_task_cpus_fit_the_master(host, master, want):
+    assert session.get_spark(master=master)["spark.task.cpus"] == want

@@ -20,14 +20,14 @@ COMMENT = {
         "shuffle-free filters of its output. The only wider stages in the "
         "full job are the sinks' key exchanges."
     ),
-    "chunk_spans": (
-        "Chunker (spec v2, the spread path's; narrow packs in-kernel): the "
-        "chunkable-kind/text filter sits under ONE "
-        "hash Exchange on doc_id + in-partition Sort, then a single "
-        "MapInPandas packer (greedy+heading state streams across Arrow "
-        "batches); the md5 id stays a codegen Project above it. Same "
-        "exchange count as the old window+groupBy plan, with true greedy "
-        "semantics windows cannot express."
+    "extract_spread": (
+        "Spread chunks: the slice kernel (MapInPandas over reading-order "
+        "slices of 64 spans) sits under ONE hash Exchange on doc_id + an "
+        "in-partition Sort that puts each document's slice sentinels "
+        "first, then the stitch MapInPandas renumbers the blocks and packs "
+        "the chunks (greedy+heading state streams across Arrow batches); "
+        "chunks are a Filter of its output and the md5 id a codegen "
+        "Project above it."
     ),
     "knn_bruteforce": (
         "Vector top-k: TakeOrderedAndProject = distributed partial top-k per "
@@ -118,7 +118,6 @@ def main() -> None:
     from docling_rag_spark.operators.retrieval import pricing_summary, revenue_by_nation
     from docling_rag_spark.operators.similarity import knn_bruteforce
     from docling_rag_spark.pipeline import (
-        chunk_spans,
         extract_documents_narrow,
         resume_filter,
         run_extraction,
@@ -133,8 +132,8 @@ def main() -> None:
 
     plans = {}
     plans["extract_narrow"] = extract_documents_narrow(corpus)
-    extracted, _, lineage = run_extraction(corpus, run_id="plans")
-    plans["chunk_spans"] = chunk_spans(extracted)
+    lineage = run_extraction(corpus, run_id="plans")[2]
+    plans["extract_spread"] = run_extraction(corpus, mode="spread")[1]
     plans["knn_bruteforce"] = knn_bruteforce(spark, sf)
     plans["pricing_summary"] = pricing_summary(spark, sf)
     plans["revenue_by_nation"] = revenue_by_nation(spark, sf)

@@ -106,7 +106,7 @@ Corpus: {n_giants} giant docs × {giant_spans} spans (all in ONE input file)
 | mode | wall median (s) | runs |
 |---|---|---|
 | narrow (doc-per-task) | {nmed} | {nwalls} |
-| spread (64-span slices → round-robin repartition 64 → kernel → window re-order) | {smed} | {swalls} |
+| spread (64-span slices → round-robin repartition 64 → kernel → doc_id stitch) | {smed} | {swalls} |
 
 Narrow pins each giant to one task — the stragglers set the wall clock.
 Spread pays one shuffle of the payload bytes but spreads the giants' spans
