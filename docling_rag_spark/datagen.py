@@ -23,7 +23,6 @@ import hashlib
 
 from .kernels.pdf_extract import MAGIC
 
-SPAN_KINDS = ("text", "html", "pdf", "image", "audio")
 GIANT_MOD = 101  # docs where md5-choice % GIANT_MOD == 0 become giants
 GIANT_REPEAT = 60  # giant docs get this many extra span groups
 
@@ -143,6 +142,3 @@ def build_spans(doc_id: str, text: str) -> list[dict]:
     return spans
 
 
-def synth_corpus(rows: list[tuple[str, str]]) -> list[dict]:
-    """rows: [(doc_id, text)] → [{doc_id, spans}] (driver-documents-derived)."""
-    return [{"doc_id": d, "spans": build_spans(d, t)} for d, t in rows]

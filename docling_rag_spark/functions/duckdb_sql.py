@@ -86,7 +86,3 @@ def shingles_sql(c: str, n: int = 3) -> str:
         f"list_distinct(list_transform(range(1, len({toks}) - {n} + 2), "
         f"i -> array_to_string({toks}[i:i+{n - 1}], ' '))) end)"
     )
-
-
-def chunk_id_sql(doc_id: str, idx: str, text: str) -> str:
-    return f"md5({doc_id}::varchar || '_' || {idx}::varchar || '_' || {text})"

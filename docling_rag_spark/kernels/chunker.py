@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from .textutils import chunk_id, token_count
 
-MAX_TOKENS = 512
+MAX_TOKENS = 512  # reference src/config.py:34
 
 CHUNKABLE_KINDS = frozenset({"heading", "text", "table"})
 

@@ -89,22 +89,6 @@ EN_STOPWORDS = frozenset(
 )
 
 
-def quality_features(s: str) -> tuple[int, int, float, float]:
-    """(n_chars, n_tokens, punct_ratio, stopword_ratio) — deterministic
-    quality signals for training-data filtering."""
-    t = tidy(s)
-    toks = t.split(" ") if t else []
-    n_chars = len(t)
-    punct = sum(1 for c in t if c in ".,;:!?")
-    sw = sum(1 for w in toks if w.lower() in EN_STOPWORDS)
-    return (
-        n_chars,
-        len(toks),
-        punct / n_chars if n_chars else 0.0,
-        sw / len(toks) if toks else 0.0,
-    )
-
-
 # --- portable hashing (md5-based, expressible in both Spark SQL & DuckDB) --
 def md5_hex(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()

@@ -26,10 +26,6 @@ from .common import table
 if TYPE_CHECKING:
     import pandas as pd
 
-MEDIA_SCHEMA = (
-    "doc_id long, media_ref string, media_kind string, content binary, "
-    "width int, height int, duration_ms int"
-)
 # Driver-sortable projection: the correctness gate canonicalizes rows by
 # sorting every column, so the raw feature array (a Python list per cell —
 # unhashable) is summarized as (feat_md5, feat_dim). The md5 is over the

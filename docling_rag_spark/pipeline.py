@@ -64,8 +64,6 @@ from .kernels.extract import extract_span
 if TYPE_CHECKING:
     import pandas as pd
 
-MAX_TOKENS = 512  # reference src/config.py:34
-
 # spread mode's kernel row: at most this many spans. An ordinary document
 # stays one row; the smallest giant auto mode spreads (AUTO_SKEW_MIN_SPANS)
 # becomes 79+ rows. One row per span measured slower on extract_increment.
@@ -90,8 +88,8 @@ class _Emitter:
     """A kernel's output rows, as column lists flushed to pandas.
 
     Per document: :meth:`open`, :meth:`block` for each block in reading
-    order (``order`` counts from 0; with ``chunk``, ChunkPacker(MAX_TOKENS)
-    packs it), then :meth:`close`: the chunks (kind='__chunk', ``order`` =
+    order (``order`` counts from 0; with ``chunk``, a ChunkPacker packs
+    it), then :meth:`close`: the chunks (kind='__chunk', ``order`` =
     chunk_index, the only rows with ``n_tokens``) and one sentinel
     (kind='__doc') carrying lineage — the error, and the block count in
     ``order``. A failed document is closed with its error and no blocks:
@@ -105,7 +103,7 @@ class _Emitter:
     def open(self, doc_id, part, n_in, pid) -> None:
         self.doc_id, self.part, self.n_in, self.pid = doc_id, part, n_in, pid
         self.n = 0
-        self.packer = ChunkPacker(MAX_TOKENS) if self.chunk else None
+        self.packer = ChunkPacker() if self.chunk else None
 
     def _row(self, order, kind, text, ref, page, n_tok=None, err=None) -> None:
         out = self.out

@@ -1,15 +1,14 @@
-"""Explicit StructTypes for every table the engine reads or writes.
+"""Explicit StructTypes for the engine's input table and its lineage
+checkpoint.
 
 Input shape is the driver contract (BASELINE.json:15 ``input_hint``);
-output shapes mirror the reference's persisted schema
-(reference docker/init.sql:6-18) and FIXTURES.md F2-F4.
+the lineage shape is FIXTURES.md F4.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -32,34 +31,6 @@ DOCUMENTS_SPANS_SCHEMA = StructType(
     [
         StructField("doc_id", StringType(), nullable=False),
         StructField("spans", ArrayType(SPAN_STRUCT)),
-    ]
-)
-
-# extraction output: ordered span sequence per document (FIXTURES.md F2)
-EXTRACTED_SPANS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), nullable=False),
-        StructField("order", IntegerType(), nullable=False),
-        StructField("kind", StringType(), nullable=False),
-        StructField("text", StringType()),
-        StructField("media_ref", StringType()),
-        StructField("page_num", IntegerType()),
-    ]
-)
-
-# persisted chunks table (reference docker/init.sql:6-18; FIXTURES.md F3)
-CHUNKS_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), nullable=False),
-        StructField("doc_id", StringType(), nullable=False),
-        StructField("text", StringType(), nullable=False),
-        StructField("page_num", IntegerType()),
-        StructField("chunk_index", IntegerType(), nullable=False),
-        StructField("n_tokens", IntegerType()),
-        StructField("doc_type", StringType()),
-        StructField("language", StringType()),
-        StructField("ingested_at", TimestampType()),
-        StructField("embedding", ArrayType(FloatType())),
     ]
 )
 

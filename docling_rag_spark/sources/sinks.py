@@ -7,28 +7,28 @@ INSERT`` or dedup-then-append; this sandbox has no Iceberg catalog jars, so
 the parquet fallback implements the same contract: appending the same batch
 twice leaves one copy per id.
 
-Filesystem routing: every existence probe / rename / delete / marker IO in
-this module dispatches on the path. A bare (schemeless) path uses plain
-POSIX ``os``/``shutil`` — zero JVM round-trips, and the one the test suite
-hammers. A scheme-qualified path (``hdfs://``, ``s3a://``, ``file://``,
-...) routes through the Hadoop FileSystem API on the active session's JVM,
-so the exactly-once protocol works on any filesystem Spark itself can
-write to (the round-5 gap: ``os.walk`` on an ``hdfs://`` output reported
-"empty" and the append silently overwrote prior runs). Atomicity caveat,
-stated honestly: the swap protocol's crash-window analysis assumes
-``rename`` is atomic — true for POSIX and HDFS, FALSE for S3A-style object
-stores (rename = copy+delete). On object stores the keyed appends remain
-idempotent (the anti-join needs only list+read), but for the rewrite-minus
-swap prefer ``iceberg_table=`` — MERGE/DELETE commit via atomic snapshot
-instead of renames.
+Filesystem: every existence probe, rename, delete and marker read/write
+in this module goes through the Hadoop FileSystem API on the active
+SparkContext's JVM (``_HadoopFS``), so a path means what it means to
+Spark's own reader and writer: a URI (``hdfs://``, ``s3a://``,
+``file://``, ...) by its scheme, a bare path against ``fs.defaultFS``. On
+a cluster whose default filesystem is HDFS, ``/warehouse/out`` is the HDFS
+directory Spark wrote, never the driver's local disk, where the probe
+would find nothing and the append would overwrite the table. Atomicity
+caveat: the swap protocol's crash-window analysis assumes ``rename`` is
+atomic — true for local disk and HDFS, FALSE for S3A-style object stores
+(rename = copy+delete). On object stores the keyed appends remain
+idempotent (the anti-join needs only list+read), but for the
+rewrite-minus swap prefer ``iceberg_table=`` — MERGE/DELETE commit via
+atomic snapshot instead of renames.
 """
 
 from __future__ import annotations
 
-import os
 import re
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,78 +43,34 @@ def _check_ident(table_ident: str) -> str:
     return table_ident
 
 
-_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
-
-
-class _PosixFS:
-    """Bare local paths: plain os/shutil. POSIX rename is atomic."""
-
-    def is_dir(self, path: str) -> bool:
-        return os.path.isdir(path)
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(src, dst)
-
-    def delete(self, path: str) -> None:
-        import shutil
-
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-        elif os.path.exists(path):
-            os.remove(path)
-
-    def has_parquet_files(self, path: str) -> bool:
-        if not os.path.isdir(path):
-            return False
-        for root, _dirs, files in os.walk(path):
-            if "_temporary" in root:
-                continue
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
-    def write_text(self, path: str, text: str) -> None:
-        with open(path, "w") as fh:
-            fh.write(text)
-
-    def read_text(self, path: str) -> str:
-        with open(path) as fh:
-            return fh.read()
-
-
 class _HadoopFS:
-    """Scheme-qualified paths: the Hadoop FileSystem API over the active
-    session's JVM — works wherever Spark itself can read/write (HDFS, S3A,
-    file://, ...). ``file://`` URIs exercise this exact code path against
-    local disk, which is how the test suite proves it."""
+    """The one filesystem adapter: the Hadoop FileSystem API on the active
+    SparkContext's JVM (see the module docstring). ``Path`` and the
+    ``FileSystem`` are looked up once per adapter; every operation below
+    builds its own adapter, so a conf change (``fs.defaultFS``) takes
+    effect on the next call."""
 
     def __init__(self, path: str):
-        spark = SparkSession.getActiveSession()
-        if spark is None:
+        sc = SparkContext._active_spark_context
+        if sc is None:
             raise RuntimeError(
-                f"scheme-qualified path {path!r} needs an active "
-                "SparkSession (the Hadoop FileSystem rides the session JVM)"
+                f"{path!r}: the sinks need an active SparkContext (the "
+                "Hadoop FileSystem rides its JVM)"
             )
-        sc = spark.sparkContext
         self._jvm = sc._jvm
-        self._fs = self._jpath(path).getFileSystem(
-            sc._jsc.hadoopConfiguration()
-        )
-
-    def _jpath(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
+        # one reflection call by full name; the attribute chain
+        # (jvm.org.apache...) makes one per package level
+        self._Path = getattr(sc._jvm, "org.apache.hadoop.fs.Path")
+        self._fs = self._Path(path).getFileSystem(sc._jsc.hadoopConfiguration())
 
     def is_dir(self, path: str) -> bool:
-        p = self._jpath(path)
+        p = self._Path(path)
         return bool(
             self._fs.exists(p) and self._fs.getFileStatus(p).isDirectory()
         )
 
     def exists(self, path: str) -> bool:
-        return bool(self._fs.exists(self._jpath(path)))
+        return bool(self._fs.exists(self._Path(path)))
 
     def rename(self, src: str, dst: str) -> None:
         # Hadoop rename onto an EXISTING directory moves src INTO it (mv
@@ -122,23 +78,23 @@ class _HadoopFS:
         # target, so guard and fail loud rather than nest silently. A False
         # return (src missing, cross-FS, ...) is likewise an error: every
         # caller relies on the rename having happened.
-        d = self._jpath(dst)
+        d = self._Path(dst)
         if self._fs.exists(d):
             raise OSError(f"rename target already exists: {dst}")
         try:
-            ok = self._fs.rename(self._jpath(src), d)
+            ok = self._fs.rename(self._Path(src), d)
         except Exception as ex:  # some FS impls throw instead of False
             raise OSError(f"hadoop rename failed: {src} -> {dst}") from ex
         if not ok:
             raise OSError(f"hadoop rename failed: {src} -> {dst}")
 
     def delete(self, path: str) -> None:
-        self._fs.delete(self._jpath(path), True)  # recursive; no-op if gone
+        self._fs.delete(self._Path(path), True)  # recursive; no-op if gone
 
     def has_parquet_files(self, path: str) -> bool:
         if not self.is_dir(path):
             return False
-        it = self._fs.listFiles(self._jpath(path), True)
+        it = self._fs.listFiles(self._Path(path), True)
         while it.hasNext():
             uri = it.next().getPath().toString()
             if "_temporary" in uri:
@@ -148,14 +104,14 @@ class _HadoopFS:
         return False
 
     def write_text(self, path: str, text: str) -> None:
-        out = self._fs.create(self._jpath(path), True)
+        out = self._fs.create(self._Path(path), True)
         try:
             out.write(bytearray(text.encode("utf-8")))
         finally:
             out.close()
 
     def read_text(self, path: str) -> str:
-        stream = self._fs.open(self._jpath(path))
+        stream = self._fs.open(self._Path(path))
         try:
             reader = self._jvm.java.io.BufferedReader(
                 self._jvm.java.io.InputStreamReader(stream, "UTF-8")
@@ -171,28 +127,20 @@ class _HadoopFS:
             stream.close()
 
 
-_POSIX = _PosixFS()
-
-
-def _fs(path: str):
-    """Route a path to its filesystem adapter (see module docstring)."""
-    return _HadoopFS(path) if _SCHEME_RE.match(path) else _POSIX
-
-
 def marker_read(path: str) -> str | None:
-    """Read a small marker file; None when absent. Scheme-aware."""
-    fs = _fs(path)
+    """Read a small marker file; None when absent."""
+    fs = _HadoopFS(path)
     return fs.read_text(path) if fs.exists(path) else None
 
 
 def marker_write(path: str, text: str = "") -> None:
-    """Write (overwrite) a small marker file. Scheme-aware."""
-    _fs(path).write_text(path, text)
+    """Write (overwrite) a small marker file."""
+    _HadoopFS(path).write_text(path, text)
 
 
 def marker_remove(path: str) -> None:
-    """Remove a marker file if present. Scheme-aware."""
-    fs = _fs(path)
+    """Remove a marker file if present."""
+    fs = _HadoopFS(path)
     if fs.exists(path):
         fs.delete(path)
 
@@ -267,17 +215,17 @@ def idempotent_append(
 
 
 def _has_parquet_files(path: str) -> bool:
-    return _fs(path).has_parquet_files(path)
+    return _HadoopFS(path).has_parquet_files(path)
 
 
 def truncate(path: str) -> None:
     """Reference reset_collection (src/storage/postgres.py:364-372)."""
-    _fs(path).delete(path)
+    _HadoopFS(path).delete(path)
 
 
 def _recover_swap(path: str) -> None:
     """Heal an interrupted rewrite-minus swap (see _swap_in for the protocol).
-    Every step of the swap is one rename (atomic on POSIX and HDFS; see
+    Every step of the swap is one rename (atomic on local disk and HDFS; see
     the module docstring for object stores), so the crash windows are:
 
     - ``.old`` exists, target missing: crashed between rename(path→old) and
@@ -292,7 +240,7 @@ def _recover_swap(path: str) -> None:
     - no ``.old``, target missing, complete tmp: first-ever write crashed
       between tmp completion and swap start with nothing to back up — adopt.
     """
-    fs = _fs(path)
+    fs = _HadoopFS(path)
     tmp = path + ".tmp"
     old = path + ".old"
     if fs.is_dir(old):
@@ -319,21 +267,12 @@ def _swap_in(path: str) -> None:
     ``.old`` exists and the target is gone, instead of treating it as stale).
     On filesystems without atomic rename (S3A) prefer the Iceberg path —
     see the module docstring."""
-    fs = _fs(path)
+    fs = _HadoopFS(path)
     old = path + ".old"
     if fs.is_dir(path):
         fs.rename(path, old)
     fs.rename(path + ".tmp", path)
     fs.delete(old)
-
-
-def delete_document(spark: SparkSession, path: str, doc_id: str) -> None:
-    """Reference remove_document DELETE WHERE doc_id (postgres.py:346-361).
-    Parquet has no row-level delete; rewrite-minus (Iceberg: DELETE FROM)."""
-    _recover_swap(path)
-    df = spark.read.parquet(path).filter(F.col("doc_id") != doc_id)
-    df.write.mode("overwrite").parquet(path + ".tmp")
-    _swap_in(path)
 
 
 def delete_docs(

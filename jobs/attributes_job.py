@@ -21,10 +21,11 @@ numeric table orders of magnitude smaller. Verdicts are a pure function
 of (attributes, policy), so they are regenerated whole, not appended
 (the same regenerate-vs-append reasoning as select_job --pack).
 
---output may be a bare local path or any scheme-qualified URI Spark can
-write; the existence probe / swap machinery dispatches per path (POSIX
-vs Hadoop FS — sources/sinks.py module docstring; S3A lacks the atomic
-rename the swap's crash analysis needs, prefer hdfs:// or Iceberg there).
+--output may be a bare path or any URI Spark can write; the existence
+probe / swap machinery goes through the Hadoop FileSystem API, so a bare
+path resolves against fs.defaultFS as Spark's writer resolves it
+(sources/sinks.py module docstring; S3A lacks the atomic rename the
+swap's crash analysis needs, prefer hdfs:// there).
 """
 
 from __future__ import annotations

@@ -22,13 +22,15 @@ Outputs under --output:
 --resume anti-joins the existing lineage (status=processed) so a killed run
 re-does only unfinished documents (E16, reference postgres.py:253-262).
 
---output may be a bare local path OR any scheme-qualified URI Spark can
-write (hdfs://, s3a://, file://): the exactly-once machinery (existence
-probe, _reingest_pending marker, swap recovery) dispatches per path —
-POSIX os.* for bare paths, the Hadoop FileSystem API for URIs (see the
-sources/sinks.py module docstring). The rewrite-minus swap in delete_docs
-needs atomic rename (POSIX/HDFS yes, S3A no) — on object stores prefer
---format iceberg so row replacement commits via atomic snapshot.
+--output may be a bare path OR any URI Spark can write (hdfs://, s3a://,
+file://): the exactly-once machinery (existence probe, _reingest_pending
+marker, swap recovery) goes through the Hadoop FileSystem API, so a bare
+path resolves against fs.defaultFS exactly as Spark's writer resolves it
+(see the sources/sinks.py module docstring). --format picks only the
+input reader: the outputs always use the parquet protocol. Its
+rewrite-minus swap in delete_docs (--reingest-modified) needs atomic
+rename — local disk and HDFS have it, S3A does not — so point --output
+at one of those when row replacement must survive a crash.
 """
 
 from __future__ import annotations

@@ -34,15 +34,17 @@ Outputs under --output:
                        from its input being the idempotent
                        selected_chunks table.
 
---output may be a bare local path OR any scheme-qualified URI Spark can
-write (hdfs://, s3a://, file://): the exactly-once machinery (existence
-probe, pack swap, marker IO) dispatches per path — POSIX os.* for bare
-paths, the Hadoop FileSystem API for URIs (sources/sinks.py module
-docstring; the file:// round-trip is regression-tested). One caveat
-carries over from Hadoop itself: the pack swap's crash analysis needs
-atomic rename, which object stores (S3A) do not provide — there the keyed
-appends stay idempotent, but prefer --format iceberg so replacement
-commits via atomic snapshot (MERGE INTO / DELETE, sources/sinks.py:35-80).
+--output may be a bare path OR any URI Spark can write (hdfs://, s3a://,
+file://): the exactly-once machinery (existence probe, pack swap, marker
+IO) goes through the Hadoop FileSystem API, so a bare path resolves
+against fs.defaultFS exactly as Spark's writer resolves it
+(sources/sinks.py module docstring; bare paths and file:// URIs are both
+regression-tested). One caveat carries over from Hadoop itself: the pack
+swap's crash analysis needs atomic rename, which object stores (S3A) do
+not provide. There the keyed appends stay idempotent, but this job's
+outputs always use the parquet protocol (--format picks only the input
+reader), so point --output at HDFS or local disk when the pack swap must
+survive a crash.
 
 Exactly-once across crashes mirrors extract_job: selected_chunks is an
 idempotent keyed append (key=id), the lineage COMMIT is written LAST — a

@@ -1,27 +1,25 @@
-"""The exactly-once sink protocol over scheme-qualified paths.
+"""The exactly-once sink protocol over every path form Spark accepts.
 
-Round-5 ADVICE (low, jobs/select_job.py:115): the protocol was local-POSIX
-only — os.walk on an hdfs:// output reported "empty" and the append
-silently overwrote prior runs. Scheme-qualified paths now route through
-the Hadoop FileSystem API on the session JVM (sinks._HadoopFS). These
-tests run the SAME crash-window and idempotence suite as
-test_streaming_sinks.py but over ``file://`` URIs, which drives the exact
-Hadoop code path (Path/FileSystem/rename/listFiles/create/open) against
-local disk — the strongest proof available without a real HDFS.
+Every probe, rename, delete and marker read/write in sources/sinks.py goes
+through the one Hadoop FileSystem adapter (sinks._HadoopFS), so a path
+resolves as Spark's own reader and writer resolve it. The crash-window,
+idempotence, delete_docs and marker cases below run over a bare path and
+over a ``file://`` URI; the regression test at the end points
+``fs.defaultFS`` at a ``viewfs://`` mount, the way a cluster whose default
+filesystem is HDFS resolves a bare ``--output``.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
 from docling_rag_spark.sources.sinks import (
-    _fs,
     _has_parquet_files,
     _HadoopFS,
-    _PosixFS,
     _recover_swap,
     delete_docs,
     idempotent_append,
@@ -35,20 +33,14 @@ def _uri(p) -> str:
     return "file://" + str(p)
 
 
-def test_dispatch_is_by_scheme(spark, tmp_path):
-    assert isinstance(_fs(str(tmp_path)), _PosixFS)
-    assert isinstance(_fs(_uri(tmp_path)), _HadoopFS)
-    # hdfs:// would dispatch to _HadoopFS too, but instantiating it needs a
-    # reachable namenode — assert on the scheme regex instead
-    from docling_rag_spark.sources.sinks import _SCHEME_RE
-
-    assert _SCHEME_RE.match("hdfs://nn/warehouse/t")
-    assert _SCHEME_RE.match("s3a://bucket/key")
-    assert not _SCHEME_RE.match("/abs/local/path")
+@pytest.fixture(params=["bare", "file_uri"])
+def as_path(request):
+    """Turn a local ``tmp_path`` location into the path form under test."""
+    return str if request.param == "bare" else _uri
 
 
-def test_idempotent_append_over_file_uri(spark, tmp_path):
-    path = _uri(tmp_path / "t")
+def test_idempotent_append(spark, tmp_path, as_path):
+    path = as_path(tmp_path / "t")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
     idempotent_append(spark, df, path)
     idempotent_append(spark, df, path)  # replay: same batch twice
@@ -56,13 +48,13 @@ def test_idempotent_append_over_file_uri(spark, tmp_path):
     idempotent_append(spark, df2, path)
     got = sorted((r["id"], r["v"]) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
-    # the probe sees the URI table as non-empty (the round-5 gap)
+    # the probe sees the table as non-empty
     assert _has_parquet_files(path)
-    assert not _has_parquet_files(_uri(tmp_path / "missing"))
+    assert not _has_parquet_files(as_path(tmp_path / "missing"))
 
 
-def _seed_swap_state(spark, base_uri):
-    path = base_uri + "/t"
+def _seed_swap_state(spark, base):
+    path = base + "/t"
     spark.createDataFrame(
         [("a", 1), ("b", 2), ("c", 3)], "doc_id string, v int"
     ).coalesce(1).write.parquet(path)
@@ -78,20 +70,20 @@ def _rows(spark, path):
     )
 
 
-def test_swap_crash_windows_over_file_uri(spark, tmp_path):
+def test_swap_crash_windows(spark, tmp_path, as_path):
     """The two crash windows whose recovery depends on FS renames actually
-    executing over the URI scheme: (1) crash between the backup rename and
-    the tmp adoption — the tmp is the only complete copy and must be
-    adopted; (2) '.old' present with an INCOMPLETE tmp — backup restored."""
-    fs = _fs(_uri(tmp_path))
+    executing: (1) crash between the backup rename and the tmp adoption —
+    the tmp is the only complete copy and must be adopted; (2) '.old'
+    present with an INCOMPLETE tmp — backup restored."""
+    fs = _HadoopFS(as_path(tmp_path))
 
-    path, tmp = _seed_swap_state(spark, _uri(tmp_path / "w1"))
+    path, tmp = _seed_swap_state(spark, as_path(tmp_path / "w1"))
     fs.rename(path, path + ".old")  # swap step 1 done, crash before step 2
     _recover_swap(path)
     assert _rows(spark, path) == [("a", 1), ("c", 3)]
     assert not fs.exists(path + ".old") and not fs.exists(tmp)
 
-    path, tmp = _seed_swap_state(spark, _uri(tmp_path / "w2"))
+    path, tmp = _seed_swap_state(spark, as_path(tmp_path / "w2"))
     fs.rename(path, path + ".old")
     fs.delete(tmp + "/_SUCCESS")  # tmp incomplete
     _recover_swap(path)
@@ -99,18 +91,19 @@ def test_swap_crash_windows_over_file_uri(spark, tmp_path):
     assert not fs.exists(path + ".old") and not fs.exists(tmp)
 
 
-def test_delete_docs_over_file_uri(spark, tmp_path):
-    path, _ = _seed_swap_state(spark, _uri(tmp_path / "d"))
+def test_delete_docs(spark, tmp_path, as_path):
+    path, _ = _seed_swap_state(spark, as_path(tmp_path / "d"))
     delete_docs(spark, path, spark.createDataFrame([("b",)], "doc_id string"))
     assert _rows(spark, path) == [("a", 1), ("c", 3)]
 
 
-def test_marker_roundtrip_over_file_uri(spark, tmp_path):
-    m = _uri(tmp_path / "m" / "_MARK")
+def test_marker_roundtrip(spark, tmp_path, as_path):
+    m = as_path(tmp_path / "m" / "_MARK")
     os.makedirs(tmp_path / "m")
     assert marker_read(m) is None
     marker_write(m, "1234")
     assert marker_read(m) == "1234"
+    assert (tmp_path / "m" / "_MARK").read_text() == "1234"  # on local disk
     marker_remove(m)
     assert marker_read(m) is None
     marker_remove(m)  # idempotent
@@ -120,13 +113,44 @@ def test_hadoop_rename_guards(spark, tmp_path):
     """Hadoop rename onto an existing dir nests src INSIDE it (mv
     semantics) — the adapter must refuse instead; and a False return
     (missing src) must raise, not silently no-op."""
-    fs = _fs(_uri(tmp_path))
+    fs = _HadoopFS(_uri(tmp_path))
     os.makedirs(tmp_path / "src")
     os.makedirs(tmp_path / "dst")
     with pytest.raises(OSError, match="target already exists"):
         fs.rename(_uri(tmp_path / "src"), _uri(tmp_path / "dst"))
     with pytest.raises(OSError, match="rename failed"):
         fs.rename(_uri(tmp_path / "nope"), _uri(tmp_path / "dst2"))
+
+
+def test_bare_path_resolves_against_default_fs(spark, tmp_path):
+    """A bare path is resolved against ``fs.defaultFS``, as Spark resolves
+    it. With the default filesystem on a ``viewfs://`` mount of tmp_path
+    (a cluster's ``hdfs://`` stand-in), two appends to one bare absolute
+    path keep both batches, and the probes see what Spark wrote there —
+    probing the driver's local disk instead reported "empty" and the
+    second append overwrote the first."""
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    # a unique mount table: Hadoop's FileSystem cache is keyed on the URI
+    # authority, so a reused name could serve another test's mount
+    table = f"mt{uuid.uuid4().hex}"
+    link = f"fs.viewfs.mounttable.{table}.link./{table}"
+    default_fs = conf.get("fs.defaultFS")
+    conf.set(link, _uri(tmp_path))
+    conf.set("fs.defaultFS", f"viewfs://{table}/")
+    try:
+        out = f"/{table}/out"
+        for v in (1, 2):
+            batch = spark.createDataFrame([(v,)], "id int")
+            idempotent_append(spark, batch, out)
+        assert sorted(r["id"] for r in spark.read.parquet(out).collect()) == [1, 2]
+        assert _has_parquet_files(out)
+        assert marker_read(out + "/_SUCCESS") == ""  # Spark's commit marker
+        assert marker_read(out + "/_MISSING") is None
+    finally:
+        conf.set("fs.defaultFS", default_fs)
+        conf.unset(link)
+    assert (tmp_path / "out" / "_SUCCESS").is_file()  # the mounted dir
+    assert not os.path.exists(out)  # never the driver's local disk
 
 
 def test_select_job_pack_and_resume_over_file_uri(spark, tmp_path, monkeypatch):

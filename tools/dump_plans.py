@@ -1,6 +1,10 @@
 """Dump .explain('formatted') for the flagship operators into PLANS.md with
 commentary — the plan-quality evidence (pushdown, pruning, broadcast,
-TakeOrderedAndProject, codegen spans)."""
+TakeOrderedAndProject, codegen spans).
+
+Only the ``## <name>`` sections this tool builds are replaced; every other
+section of PLANS.md (hand-written notes on later operators) stays where it
+is. Run: ``python tools/dump_plans.py``."""
 
 from __future__ import annotations
 
@@ -111,6 +115,41 @@ COMMENT = {
 }
 
 
+PREAMBLE = """# PLANS — physical plans of the flagship operators
+
+`df.explain('formatted')` captures (sf0.001, local[8]); asserts in
+tests/test_operators.py keep the key properties from regressing.
+
+"""
+
+
+def _sections(text: str) -> tuple[str, list[list[str]]]:
+    """(preamble, [(name, section)]): a section runs from its ``## <name>``
+    heading to the next heading outside a code fence."""
+    head, secs, fence = "", [], False
+    for line in text.splitlines(keepends=True):
+        if line.startswith("```"):
+            fence = not fence
+        if not fence and line.startswith("## "):
+            secs.append([line.split()[1], line])
+        elif secs:
+            secs[-1][1] += line
+        else:
+            head += line
+    return head, secs
+
+
+def splice(text: str, built: dict[str, str]) -> str:
+    """``text`` with each section named in ``built`` replaced in place;
+    sections it does not have yet are appended at the end."""
+    head, secs = _sections(text)
+    todo = dict(built)
+    out = head + "".join(todo.pop(name, sec) for name, sec in secs)
+    if todo and not out.endswith("\n"):
+        out += "\n"
+    return out + "".join(todo.values())
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -163,11 +202,7 @@ def main() -> None:
     plans["knn_ivf_batch"] = knn_ivf_batch(spark, sf)
     plans["text_gopher_filters"] = gopher_quality(spark, sf)
 
-    out = ["# PLANS — physical plans of the flagship operators",
-           "",
-           "`df.explain('formatted')` captures (sf0.001, local[8]); asserts in",
-           "tests/test_operators.py keep the key properties from regressing.",
-           ""]
+    sections = {}
     for name, df in plans.items():
         buf = io.StringIO()
         with redirect_stdout(buf):
@@ -178,10 +213,12 @@ def main() -> None:
         tree, _, details = txt.partition("\n\n")
         keep = [l for l in details.splitlines()
                 if any(k in l for k in ("PushedFilters", "ReadSchema", "Location")) ]
-        out += [f"## {name}", "", COMMENT.get(name, ""), "", "```",
-                tree.strip()[:4000], *(keep[:8]), "```", ""]
-    (REPO / "PLANS.md").write_text("\n".join(out))
-    print("wrote PLANS.md")
+        sections[name] = "\n".join([
+            f"## {name}", "", COMMENT.get(name, ""), "", "```",
+            tree.strip()[:4000], *(keep[:8]), "```", "", ""])
+    path = REPO / "PLANS.md"
+    path.write_text(splice(path.read_text() if path.exists() else PREAMBLE, sections))
+    print(f"updated {len(sections)} sections of PLANS.md")
     spark.stop()
 
 
