@@ -50,7 +50,6 @@ def training_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs(spark, sf_dir)
         .filter(F.col("n_shared_bands") >= STRONG_BANDS)
         .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
     )
     return kept.join(dups, "doc_id", "left_anti")
 

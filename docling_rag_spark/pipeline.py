@@ -378,21 +378,21 @@ def resume_filter(
     name of a source timestamp column; a document already processed is
     STILL re-ingested when ``docs[modified_col] > max(lineage.ingested_at)``
     for it — the incremental re-ingest predicate. None keeps the pure
-    anti-join (never re-process)."""
+    anti-join (never re-process); a null modified is skipped, a doc whose
+    processed rows all lack ``ingested_at`` is re-ingested. Set semantics:
+    an anti/semi join's right side is never deduplicated first (a distinct
+    adds only an aggregate, an Exchange and a stage)."""
     if lineage is None:
         return docs
     done = lineage.filter(F.col("status") == "processed")
     if modified_col is None or "ingested_at" not in lineage.columns:
-        return docs.join(done.select("doc_id").distinct(), "doc_id", "left_anti")
-    last = done.groupBy("doc_id").agg(F.max("ingested_at").alias("_ingested_at"))
-    return (
-        docs.join(last, "doc_id", "left")
-        .filter(
-            F.col("_ingested_at").isNull()
-            | (F.col(modified_col) > F.col("_ingested_at"))
-        )
-        .drop("_ingested_at")
+        return docs.join(done.select("doc_id"), "doc_id", "left_anti")
+    done = done.select(
+        F.col("doc_id").alias("_done_id"), F.col("ingested_at").alias("_ingested_at")
     )
+    ing, mod = F.col("_ingested_at"), F.col(modified_col)
+    cond = (F.col("doc_id") == F.col("_done_id")) & ing.isNotNull()
+    return docs.join(done, cond & (mod.isNull() | (mod <= ing)), "left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -513,11 +513,11 @@ def choose_extraction_mode(docs: DataFrame) -> str:
     straggler: max ≥ AUTO_SKEW_MIN_SPANS and max ≥ AUTO_SKEW_RATIO ×
     MEDIAN (the median is the robust center — the giant itself drags the
     MEAN up by its own mass, hiding exactly the skew being probed for).
-    One aggregate over size(spans) — no payload kernel work, the driver
-    gets two numbers (approx-percentile sketch state, mergeable)."""
+    One aggregate over size(spans.kind) — nested-schema pruning reads no
+    payload; the driver gets two numbers (approx-percentile, mergeable)."""
+    n = F.size("spans.kind")
     row = docs.agg(
-        F.max(F.size("spans")).alias("mx"),
-        F.percentile_approx(F.size("spans"), 0.5).alias("med"),
+        F.max(n).alias("mx"), F.percentile_approx(n, 0.5).alias("med")
     ).collect()[0]
     mx = row["mx"] or 0
     med = row["med"] or 0

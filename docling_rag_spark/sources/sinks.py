@@ -21,6 +21,9 @@ atomic — true for local disk and HDFS, FALSE for S3A-style object stores
 idempotent (the anti-join needs only list+read), but for the
 rewrite-minus swap prefer ``iceberg_table=`` — MERGE/DELETE commit via
 atomic snapshot instead of renames.
+
+Set semantics: the keys an anti join reads (a table's existing keys, the
+ids to delete) are never deduplicated first; only the batch itself is.
 """
 
 from __future__ import annotations
@@ -92,15 +95,18 @@ class _HadoopFS:
         self._fs.delete(self._Path(path), True)  # recursive; no-op if gone
 
     def has_parquet_files(self, path: str) -> bool:
-        if not self.is_dir(path):
-            return False
-        it = self._fs.listFiles(self._Path(path), True)
-        while it.hasNext():
-            uri = it.next().getPath().toString()
-            if "_temporary" in uri:
-                continue
-            if uri.endswith(".parquet"):
-                return True
+        # what Spark's reader lists: below the root, no "." or "_" names
+        # (bar "_k=v" dirs); stop at the first .parquet file
+        todo = [self._Path(path)] if self.is_dir(path) else []
+        while todo:
+            for st in self._fs.listStatus(todo.pop()):
+                name = st.getPath().getName()
+                if name[0] == "." or (name[0] == "_" and "=" not in name):
+                    continue
+                if st.isDirectory():
+                    todo.append(st.getPath())
+                elif name.endswith(".parquet"):
+                    return True
         return False
 
     def write_text(self, path: str, text: str) -> None:
@@ -207,8 +213,7 @@ def idempotent_append(
     # parquet without the marker (partially-committed job, foreign writer)
     # must be anti-joined against, never silently overwritten
     if _has_parquet_files(path):
-        existing = spark.read.parquet(path).select(*keys).distinct()
-        new = new.join(existing, keys, "left_anti")
+        new = new.join(spark.read.parquet(path).select(*keys), keys, "left_anti")
         new.write.mode("append").parquet(path)
     else:
         new.write.mode("overwrite").parquet(path)
@@ -291,7 +296,7 @@ def delete_docs(
     _recover_swap on every entry)."""
     if iceberg_table and iceberg_available(spark):
         view = f"_del_ids_{uuid.uuid4().hex}"
-        doc_ids.select("doc_id").distinct().createOrReplaceTempView(view)
+        doc_ids.select("doc_id").createOrReplaceTempView(view)
         try:
             spark.sql(
                 f"delete from {_check_ident(iceberg_table)} "
@@ -304,7 +309,7 @@ def delete_docs(
     if not _has_parquet_files(path):
         return
     remaining = spark.read.parquet(path).join(
-        F.broadcast(doc_ids.select("doc_id").distinct()), "doc_id", "left_anti"
+        F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_anti"
     )
     remaining.write.mode("overwrite").parquet(path + ".tmp")
     _swap_in(path)

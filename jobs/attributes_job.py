@@ -94,7 +94,7 @@ def main() -> None:
         docs = spark.read.parquet(args.input)
         todo = docs
         if args.resume and _has_parquet_files(attr_dir):
-            done = spark.read.parquet(attr_dir).select("doc_id").distinct()
+            done = spark.read.parquet(attr_dir).select("doc_id")
             todo = docs.join(done, "doc_id", "left_anti")
         tagged = base_attributes_frame(todo)
         idempotent_append(spark, tagged, attr_dir, key="doc_id")

@@ -51,7 +51,8 @@ def main() -> None:
     p.add_argument("--mode", default="narrow",
                    choices=["narrow", "spread", "auto"])
     p.add_argument("--repartition-to", type=int, default=None,
-                   help="spread-mode round-robin width (skew defuse)")
+                   help="round-robin the kernel rows to N partitions: whole "
+                        "docs in narrow mode, slices in spread mode")
     p.add_argument("--resume", action="store_true",
                    help="anti-join prior lineage at --output/lineage")
     p.add_argument("--reingest-modified", action="store_true",
@@ -64,9 +65,20 @@ def main() -> None:
                    help="attach embeddings to chunks (E14 stage)")
     args = p.parse_args()
 
-    from pyspark.sql import SparkSession
+    from datetime import datetime, timezone
 
-    from docling_rag_spark.pipeline import doc_metadata, run_extraction
+    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
+
+    from docling_rag_spark.pipeline import doc_metadata, resume_filter, run_extraction
+    from docling_rag_spark.sources.sinks import (
+        _has_parquet_files,
+        delete_docs,
+        idempotent_append,
+        marker_read,
+        marker_remove,
+        marker_write,
+    )
 
     # On a cluster, spark-submit provides master/conf; builder only names the app.
     spark = SparkSession.builder.appName("docling-rag-extract").getOrCreate()
@@ -85,8 +97,6 @@ def main() -> None:
     else:
         docs = spark.read.parquet(args.input)
 
-    from docling_rag_spark.sources.sinks import _has_parquet_files
-
     lineage_dir = os.path.join(args.output, "lineage")
     prior = None
     if args.resume and _has_parquet_files(lineage_dir):
@@ -95,8 +105,6 @@ def main() -> None:
     # resume-filter ONCE here so doc_metadata below also sees only the docs
     # this run actually processes (metadata over the full input would append
     # empty/duplicate rows for already-done docs on --resume)
-    from docling_rag_spark.pipeline import resume_filter
-
     modified_col = (
         "modified_at"
         if args.reingest_modified and "modified_at" in docs.columns
@@ -107,12 +115,6 @@ def main() -> None:
     # those docs forever. The marker forces the operator to finish what was
     # started (the modified-predicate recomputes the same redo set, deletes
     # are idempotent, and the run converges).
-    from docling_rag_spark.sources.sinks import (
-        marker_read,
-        marker_remove,
-        marker_write,
-    )
-
     pending_marker = os.path.join(args.output, "_reingest_pending")
     if marker_read(pending_marker) is not None and not args.reingest_modified:
         raise SystemExit(
@@ -127,13 +129,7 @@ def main() -> None:
         # docs that actually HAVE committed output (a processed lineage
         # row) are rewritten — brand-new docs must not trigger a
         # full-table rewrite — and an empty redo set skips it entirely.
-        from pyspark.sql import functions as F
-
-        from docling_rag_spark.sources.sinks import delete_docs
-
-        done_ids = prior.filter(F.col("status") == "processed").select(
-            "doc_id"
-        ).distinct()
+        done_ids = prior.filter(F.col("status") == "processed").select("doc_id")
         redo_ids = (
             todo.select("doc_id").join(done_ids, "doc_id", "left_semi")
         ).localCheckpoint(eager=True)
@@ -141,8 +137,6 @@ def main() -> None:
             marker_write(pending_marker)
             for sub in ("extracted_spans", "chunks", "doc_metadata"):
                 delete_docs(spark, os.path.join(args.output, sub), redo_ids)
-    from datetime import datetime, timezone
-
     extracted, chunks, lineage = run_extraction(
         todo,
         run_id=run_id,
@@ -159,8 +153,6 @@ def main() -> None:
     # --resume, but the key anti-joins drop the replayed rows (the batch
     # analog of the streaming sink's guarantee; reference ON CONFLICT DO
     # NOTHING, src/storage/postgres.py:104-106).
-    from docling_rag_spark.sources.sinks import idempotent_append
-
     idempotent_append(
         spark, extracted, os.path.join(args.output, "extracted_spans"),
         key=["doc_id", "order"],
@@ -178,8 +170,6 @@ def main() -> None:
     marker_remove(pending_marker)  # replacement fully committed
 
     n = lineage.sparkSession.read.parquet(lineage_dir)
-    from pyspark.sql import functions as F
-
     stats = {r["status"]: r["count"] for r in n.groupBy("status").count().collect()}
     # this-run count from the lineage that was just appended (cumulative
     # totals alone can't show that a --resume run processed 0 new docs)

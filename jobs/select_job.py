@@ -118,7 +118,7 @@ def main() -> None:
     if args.resume and _has_parquet_files(lineage_dir):
         # ANY lineage row (selected or fully filtered) marks the doc done —
         # otherwise zero-selected docs would re-score forever on resume
-        done_docs = spark.read.parquet(lineage_dir).select("doc_id").distinct()
+        done_docs = spark.read.parquet(lineage_dir).select("doc_id")
 
     # the selection plan always sees the FULL chunk table (see module
     # docstring: corpus-consistent dedup); resume trims only the write side

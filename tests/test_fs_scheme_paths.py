@@ -53,6 +53,59 @@ def test_idempotent_append(spark, tmp_path, as_path):
     assert not _has_parquet_files(as_path(tmp_path / "missing"))
 
 
+def test_append_under_temporary_named_root(spark, tmp_path, as_path):
+    """Only names BELOW the table root are hidden from the probe: a root
+    whose own path contains ``_temporary`` is still a table, and a second
+    append keeps the first batch."""
+    path = as_path(tmp_path / "run_temporary" / "out")
+    for v in (1, 2):
+        idempotent_append(spark, spark.createDataFrame([(v,)], "id int"), path)
+    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == [1, 2]
+
+
+def test_probe_ignores_files_spark_does_not_read(spark, tmp_path, as_path):
+    """A table whose only parquet file sits under ``_temporary/`` (an
+    uncommitted task attempt) reads as empty to Spark, and to the probe."""
+    spark.createDataFrame([(1,)], "id int").coalesce(1).write.parquet(
+        str(tmp_path / "src")
+    )
+    (part,) = (tmp_path / "src").glob("*.parquet")
+    attempt = tmp_path / "t" / "_temporary" / "0"
+    attempt.mkdir(parents=True)
+    part.rename(attempt / part.name)
+    assert not _has_parquet_files(as_path(tmp_path / "t"))
+    # a partition directory counts, even one whose column starts with "_"
+    (tmp_path / "t" / "_k=1").mkdir()
+    (attempt / part.name).rename(tmp_path / "t" / "_k=1" / part.name)
+    assert _has_parquet_files(as_path(tmp_path / "t"))
+    assert spark.read.parquet(as_path(tmp_path / "t")).count() == 1
+
+
+def test_append_joins_existing_keys_without_dedup(spark, tmp_path, monkeypatch):
+    """Appending into a non-empty table anti-joins the table's keys as they
+    are: the written frame's one aggregate is the batch's own key dedup."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "t")
+    schema = "id int, v string"
+    idempotent_append(spark, spark.createDataFrame([(1, "a")], schema), path)
+    written, parquet = [], DataFrameWriter.parquet
+
+    def spy(writer, *args, **kwargs):
+        written.append(writer._df)
+        return parquet(writer, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    batch = spark.createDataFrame([(1, "a"), (2, "b"), (2, "b")], schema)
+    idempotent_append(spark, batch, path)
+    monkeypatch.undo()
+    (df,) = written
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Aggregate") == 1, plan
+    assert plan.count("Join LeftAnti") == 1, plan
+    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == [1, 2]
+
+
 def _seed_swap_state(spark, base):
     path = base + "/t"
     spark.createDataFrame(

@@ -115,13 +115,28 @@ def test_pricing_pushdown_and_pruning(spark):
 
 
 def test_resume_filter_is_anti_join(spark):
-    from docling_rag_spark.pipeline import resume_filter
-    from docling_rag_spark.schemas import DOCUMENTS_SPANS_SCHEMA, LINEAGE_SCHEMA
+    """Both forms (plain resume and re-ingest of modified docs) are ONE
+    left-anti join against the lineage, with no aggregate: an anti join has
+    set semantics, so neither a distinct nor a max(ingested_at) belongs in
+    front of it."""
+    import datetime as dt
 
-    docs = spark.createDataFrame([], schema=DOCUMENTS_SPANS_SCHEMA)
-    lin = spark.createDataFrame([], schema=LINEAGE_SCHEMA)
-    plan = resume_filter(docs, lin)._jdf.queryExecution().analyzed().toString()
-    assert "LeftAnti" in plan
+    from docling_rag_spark.pipeline import resume_filter
+    from docling_rag_spark.schemas import LINEAGE_SCHEMA
+
+    t = dt.datetime(2026, 1, 1)
+    docs = spark.createDataFrame(
+        [("a", t), ("b", t)], "doc_id string, modified_at timestamp"
+    )
+    lin = spark.createDataFrame(
+        [("r1", 0, "a", "processed", None, 1, 1, t)] * 2, schema=LINEAGE_SCHEMA
+    )
+    for modified_col in (None, "modified_at"):
+        out = resume_filter(docs, lin, modified_col=modified_col)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Join LeftAnti") == 1, plan
+        assert "Aggregate" not in plan, plan
+        assert [r["doc_id"] for r in out.collect()] == ["b"]
 
 
 def test_hybrid_fallback_to_vector_only(spark):

@@ -135,6 +135,21 @@ def test_modified_doc_reingest_predicate(spark):
     assert {r["doc_id"] for r in resume_filter(docs, lineage).collect()} == {
         "brandnew"
     }
+    # null edges: a null modified_at is skipped like an unmodified doc; a
+    # doc whose processed rows all lack ingested_at is re-ingested
+    nulls = spark.createDataFrame(
+        [("nomod", span, None), ("noing", span, t_ing)], schema=schema
+    )
+    nulls_lin = spark.createDataFrame(
+        [
+            ("r1", 0, "nomod", "processed", None, 1, 1, t_ing),
+            ("r1", 0, "noing", "processed", None, 1, 1, None),
+            ("r2", 0, "noing", "processed", None, 1, 1, None),
+        ],
+        schema=LINEAGE_SCHEMA,
+    )
+    got = resume_filter(nulls, nulls_lin, modified_col="modified_at").collect()
+    assert [r["doc_id"] for r in got] == ["noing"]
     # integration: the re-ingest run extracts exactly those two docs
     todo2 = resume_filter(docs, lineage, modified_col="modified_at")
     ex, _, lin3 = run_extraction(todo2, run_id="r3")
@@ -142,7 +157,9 @@ def test_modified_doc_reingest_predicate(spark):
     assert {r["doc_id"] for r in ex.collect()} == {"touched", "brandnew"}
 
 
-def test_auto_mode_picks_narrow_on_uniform_spread_on_giant(spark):
+def test_auto_mode_picks_narrow_on_uniform_spread_on_giant(
+    spark, tmp_path, monkeypatch
+):
     """choose_extraction_mode: a uniform corpus stays narrow (spread would
     pay a payload shuffle for nothing); a corpus with one true giant doc
     (absolutely large AND far off the mean) flips to spread; and
@@ -176,6 +193,20 @@ def test_auto_mode_picks_narrow_on_uniform_spread_on_giant(spark):
         schema=DOCUMENTS_SPANS_SCHEMA,
     )
     assert choose_extraction_mode(skewed) == "spread"
+    # over a parquet scan the probe reads the span kinds only (nested-schema
+    # pruning), never the payloads
+    skewed.write.parquet(str(tmp_path / "skewed"))
+    scanned = spark.read.parquet(str(tmp_path / "skewed"))
+    plans, collect = [], type(scanned).collect
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(type(scanned), "collect", spy)
+    assert choose_extraction_mode(scanned) == "spread"
+    monkeypatch.undo()
+    assert "ReadSchema: struct<spans:array<struct<kind:string>>>" in plans[0], plans
 
     # auto output ≡ the explicitly chosen mode's output
     for corpus, explicit in ((uniform, "narrow"), (skewed, "spread")):

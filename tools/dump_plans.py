@@ -64,8 +64,10 @@ COMMENT = {
         "joins on (band, sig) — the LSH prefilter that keeps pairs ~linear."
     ),
     "resume_filter": (
-        "Resume: LeftAnti hash join against the lineage checkpoint — with a "
-        "small done-set it broadcasts; at scale it's one shuffle on doc_id."
+        "Resume: one LeftAnti hash join against the lineage checkpoint's "
+        "doc_ids, not deduplicated first (an anti join has set semantics) — "
+        "with a small done-set it broadcasts; at scale it's one shuffle on "
+        "doc_id."
     ),
     "dedup_simhash": (
         "SimHash (round-3 shape): the 32 per-bit counters are PARALLEL sum "
@@ -211,7 +213,7 @@ def main() -> None:
         # keep the operator tree + the interesting scan details, drop the
         # long per-node field dumps
         tree, _, details = txt.partition("\n\n")
-        keep = [l for l in details.splitlines()
+        keep = [l.replace(f"{REPO}/", "") for l in details.splitlines()
                 if any(k in l for k in ("PushedFilters", "ReadSchema", "Location")) ]
         sections[name] = "\n".join([
             f"## {name}", "", COMMENT.get(name, ""), "", "```",
