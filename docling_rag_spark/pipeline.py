@@ -34,6 +34,9 @@ METADATA (doc_metadata, one shuffle):
     With persist_blocks=True the kernel output is cached, so no Python
     kernel re-runs for it.
 
+COMMIT (commit_extraction, the batch job's and the stream's one commit):
+    four keyed idempotent appends over one cached kernel output, lineage last.
+
 Scale notes (100 TB):
 - Extraction is embarrassingly parallel per document → narrow is default;
   spread's repartition and doc_id exchange shuffle every payload byte and
@@ -47,18 +50,21 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
 import traceback
 from collections.abc import Iterator
 from functools import partial
 from typing import TYPE_CHECKING
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.text import detect_language_col
 from .kernels.chunker import ChunkPacker
 from .kernels.extract import extract_span
+from .operators.embed import embed_chunks
+from .sources.sinks import idempotent_append
 
 
 if TYPE_CHECKING:
@@ -359,12 +365,15 @@ def _run_ts_col(run_ts) -> "F.Column":
     """ingested_at stamp = the JOB START time (conservative): a commit-time
     stamp would mask any source modification that lands while the job runs —
     modified_at(T1 during job) < ingested_at(commit T2) and the E17
-    predicate would never re-ingest it. Fixed per run, not per action:
-    current_timestamp() re-evaluates per materialization."""
+    predicate would never re-ingest it. The default is taken when the plan
+    is built, before any extraction job reads input. Fixed per run, not per
+    action: current_timestamp() re-evaluates per materialization."""
     from datetime import datetime, timezone
 
     ts = run_ts or datetime.now(timezone.utc)
-    return F.to_timestamp(F.lit(ts.strftime("%Y-%m-%d %H:%M:%S.%f")))
+    # an aware instant is one epoch whatever spark.sql.session.timeZone
+    # says; a naive run_ts is read as UTC
+    return F.lit(ts if ts.tzinfo else ts.replace(tzinfo=timezone.utc))
 
 
 def resume_filter(
@@ -401,13 +410,13 @@ def resume_filter(
 def run_extraction(
     docs: DataFrame,
     run_id: str = "run0",
-    prior_lineage: DataFrame | None = None,
     repartition_to: int | None = None,
     persist_blocks: bool = False,
     mode: str = "narrow",
     run_ts=None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Full pipeline → (extracted_spans, chunks, lineage).
+    """Every document of ``docs`` → (extracted_spans, chunks, lineage).
+    Resume first (resume_filter); commit_extraction resolves ``auto``.
 
     Modes (one kernel; both produce IDENTICAL output — tested):
     * ``narrow`` (default): one kernel row per document, ordering and
@@ -431,38 +440,26 @@ def run_extraction(
     extracted, chunks and lineage are all filters of that one frame, and
     doc_metadata reads it too, so the Python kernels run once (in whichever
     sink comes first) — use it when materializing more than one output in
-    the same job batch (e.g. extract_job, the streaming sink).
+    the same job batch (commit_extraction does).
     ``release_extraction(lineage)`` drops the cache when the batch is
     written.
-
-    * ``auto``: probe the per-doc span-count distribution and pick for you
-      (choose_extraction_mode) — spread only when a giant-document
-      straggler is actually present. The probe costs one size-only pass
-      over the spans column (no kernel CPU); at very large scale prefer
-      passing a precomputed span-count table statistic and choosing the
-      mode at the caller, or accept the pass — a wrong narrow choice costs
-      more (one 60k-span doc serializes an entire executor-hour behind a
-      single task; the skew demo measures 2.1× on a mild version).
     """
-    todo = resume_filter(docs, prior_lineage)
-    if mode == "auto":
-        mode = choose_extraction_mode(todo)
     if mode == "narrow":
         if repartition_to:
             # round-robin whole-doc rows (spreads docs, not spans — use
             # mode='spread' to split giants)
-            todo = todo.repartition(repartition_to)
-        raw = extract_documents_narrow(todo)
+            docs = docs.repartition(repartition_to)
+        raw = extract_documents_narrow(docs)
     elif mode == "spread":
         # one doc_id cluster; each document's slice sentinels sort first
         raw = (
-            extract_documents_spread(todo, repartition_to)
+            extract_documents_spread(docs, repartition_to)
             .repartition("doc_id")
             .sortWithinPartitions("doc_id", F.col("kind") != "__doc", "part", "order")
             .mapInPandas(_stitch_kernel, schema=_KERNEL_SCHEMA)
         )
     else:
-        raise ValueError(f"unknown mode {mode!r} (narrow|spread|auto)")
+        raise ValueError(f"unknown mode {mode!r} (narrow|spread)")
     if persist_blocks:
         raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
     extracted = raw.filter(~F.col("kind").isin("__doc", "__chunk")).select(
@@ -487,6 +484,50 @@ def run_extraction(
     if persist_blocks:
         lineage._cached = (raw,)  # what release_extraction unpersists
     return extracted, chunks, lineage
+
+
+def commit_extraction(
+    spark: SparkSession,
+    todo: DataFrame,
+    out: str,
+    run_id: str,
+    mode: str = "narrow",
+    embed: bool = False,
+    repartition_to: int | None = None,
+) -> None:
+    """Extract ``todo`` (already resumed) and append its outputs under
+    ``out``: extracted_spans (key doc_id, order), chunks (id; embedded when
+    ``embed``), doc_metadata (doc_id; processed documents only, so a failed
+    document that succeeds on a later run gets its row then), then lineage
+    (run_id, doc_id) LAST — the commit point. A run killed before the
+    lineage append re-processes those documents on resume, and the keyed
+    anti-joins drop the replayed rows (reference ON CONFLICT DO NOTHING,
+    src/storage/postgres.py:104-106). ingested_at is stamped when the plan
+    is built, before any document is read (see _run_ts_col).
+
+    ``mode='auto'`` picks with choose_extraction_mode: one size-only pass
+    over the span kinds, spread only when a giant-document straggler is
+    present (a wrong narrow choice serializes a 60k-span doc behind one
+    task). The cached kernel output is released however the appends end.
+    """
+    if mode == "auto":
+        mode = choose_extraction_mode(todo)
+    extracted, chunks, lineage = run_extraction(
+        todo, run_id=run_id, repartition_to=repartition_to,
+        persist_blocks=True, mode=mode,
+    )
+    done = lineage.filter(F.col("status") == "processed").select("doc_id")
+    meta = doc_metadata(todo.join(done, "doc_id", "left_semi"), extracted, chunks)
+    try:
+        for name, df, key in (
+            ("extracted_spans", extracted, ["doc_id", "order"]),
+            ("chunks", embed_chunks(chunks) if embed else chunks, "id"),
+            ("doc_metadata", meta, "doc_id"),
+            ("lineage", lineage, ["run_id", "doc_id"]),
+        ):
+            idempotent_append(spark, df, os.path.join(out, name), key=key)
+    finally:
+        release_extraction(lineage)
 
 
 def release_extraction(lineage: DataFrame) -> None:

@@ -208,18 +208,18 @@ def idempotent_append(
         _merge_not_matched(spark, df, iceberg_table, keys)
         return
     new = df.dropDuplicates(keys)
-    _recover_swap(path)
-    # branch on actual data files, NOT the _SUCCESS marker: a target holding
-    # parquet without the marker (partially-committed job, foreign writer)
-    # must be anti-joined against, never silently overwritten
-    if _has_parquet_files(path):
+    if has_table(path):
         new = new.join(spark.read.parquet(path).select(*keys), keys, "left_anti")
         new.write.mode("append").parquet(path)
     else:
         new.write.mode("overwrite").parquet(path)
 
 
-def _has_parquet_files(path: str) -> bool:
+def has_table(path: str) -> bool:
+    """Heal any interrupted swap at ``path``, then report whether it holds
+    a parquet file Spark would read — data files, NOT the _SUCCESS marker:
+    a partially-committed or foreign-written target is still a table."""
+    _recover_swap(path)
     return _HadoopFS(path).has_parquet_files(path)
 
 
@@ -229,7 +229,7 @@ def truncate(path: str) -> None:
 
 
 def _recover_swap(path: str) -> None:
-    """Heal an interrupted rewrite-minus swap (see _swap_in for the protocol).
+    """Heal an interrupted swap (see replace for the protocol).
     Every step of the swap is one rename (atomic on local disk and HDFS; see
     the module docstring for object stores), so the crash windows are:
 
@@ -265,18 +265,24 @@ def _recover_swap(path: str) -> None:
         fs.delete(tmp)
 
 
-def _swap_in(path: str) -> None:
-    """Atomic-rename swap: never a window where the only complete copy can
-    be discarded. rename(path→path.old) and rename(tmp→path) are each atomic;
-    a crash anywhere is healed by _recover_swap (which adopts the tmp whenever
-    ``.old`` exists and the target is gone, instead of treating it as stale).
-    On filesystems without atomic rename (S3A) prefer the Iceberg path —
-    see the module docstring."""
+def replace(df: DataFrame, path: str, files: dict[str, str] | None = None) -> None:
+    """Replace the table at ``path`` with ``df``, atomically: heal any
+    earlier crash, write ``path.tmp`` plus the small ``files`` ({name:
+    text}) inside it, so one rename publishes both, then rename
+    path→path.old, tmp→path and delete ``.old``. Each step is one atomic
+    rename, so no crash can discard the only complete copy (the next entry
+    heals it, _recover_swap); mode('overwrite') would delete the target
+    before writing. Object stores (S3A) lack atomic rename: prefer the
+    Iceberg path there (module docstring)."""
+    _recover_swap(path)
+    tmp, old = path + ".tmp", path + ".old"
+    df.write.mode("overwrite").parquet(tmp)
+    for name, text in (files or {}).items():
+        marker_write(f"{tmp}/{name}", text)
     fs = _HadoopFS(path)
-    old = path + ".old"
     if fs.is_dir(path):
         fs.rename(path, old)
-    fs.rename(path + ".tmp", path)
+    fs.rename(tmp, path)
     fs.delete(old)
 
 
@@ -292,8 +298,8 @@ def delete_docs(
     drop the re-extracted ones. With ``iceberg_table`` + runtime jars this
     is a real ``DELETE FROM t WHERE doc_id IN (...)`` (atomic snapshot,
     row-level delete files); the parquet fallback is a rewrite-minus
-    (anti-join, write tmp, atomic-rename swap — with crash recovery via
-    _recover_swap on every entry)."""
+    through ``replace`` (anti-join, write tmp, atomic-rename swap — with
+    crash recovery on every entry)."""
     if iceberg_table and iceberg_available(spark):
         view = f"_del_ids_{uuid.uuid4().hex}"
         doc_ids.select("doc_id").createOrReplaceTempView(view)
@@ -305,11 +311,9 @@ def delete_docs(
         finally:
             spark.catalog.dropTempView(view)
         return
-    _recover_swap(path)
-    if not _has_parquet_files(path):
+    if not has_table(path):
         return
     remaining = spark.read.parquet(path).join(
         F.broadcast(doc_ids.select("doc_id")), "doc_id", "left_anti"
     )
-    remaining.write.mode("overwrite").parquet(path + ".tmp")
-    _swap_in(path)
+    replace(remaining, path)

@@ -4,11 +4,15 @@ The reference's closest behavior is the dashboard's streaming file
 discovery + incremental skip (reference src/dashboard/routes/ingestion.py:
 149-192 and the document_exists skip, src/storage/postgres.py:253-262).
 Here that becomes the idiomatic Spark shape: ``readStream`` over the input
-table directory → ``foreachBatch`` running the SAME batch extraction DAG →
-idempotent append, with exactly-once via the streaming checkpoint (file
-source tracks processed files; a killed job resumes where it left off).
+table directory → ``foreachBatch`` running the SAME commit as the batch
+job (pipeline.commit_extraction), with exactly-once via the streaming
+checkpoint (file source tracks processed files; a killed job resumes where
+it left off).
 
-Batch and streaming share one code path (run_extraction) — no forked logic.
+Outputs under ``out_dir``, as jobs/extract_job.py writes them (key in
+brackets, lineage last): extracted_spans/ [doc_id, order], chunks/ [id],
+doc_metadata/ [doc_id] of the processed documents, lineage/ [run_id,
+doc_id] with run_id ``<run_id>-b<batch_id>``.
 """
 
 from __future__ import annotations
@@ -17,8 +21,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import release_extraction, run_extraction
+from ..pipeline import commit_extraction, resume_filter
 from ..schemas import DOCUMENTS_SPANS_SCHEMA
+from ..sources.sinks import has_table
 
 
 def stream_ingest(
@@ -41,38 +46,19 @@ def stream_ingest(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.load(input_dir)
 
-    chunks_dir = os.path.join(out_dir, "chunks")
-    spans_dir = os.path.join(out_dir, "extracted_spans")
     lineage_dir = os.path.join(out_dir, "lineage")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # doc-level exactly-once: the file-source checkpoint dedups FILES,
         # not documents — a doc re-delivered inside a new file would be
         # re-extracted. Anti-join the accumulated lineage (the reference's
-        # document_exists skip / ON CONFLICT DO NOTHING semantics,
-        # src/storage/postgres.py:104-106,253-262); dropDuplicates handles a
-        # doc appearing twice INSIDE one micro-batch.
-        from ..sources.sinks import _has_parquet_files, idempotent_append
-
-        prior = None
-        if _has_parquet_files(lineage_dir):  # not the _SUCCESS marker: a
-            # partially-committed lineage dir must still drive the anti-join
-            prior = spark.read.parquet(lineage_dir)
-        extracted, chunks, lineage = run_extraction(
-            batch_df.dropDuplicates(["doc_id"]),
-            run_id=f"{run_id}-b{batch_id}",
-            prior_lineage=prior,
-            persist_blocks=True,
-        )
-        # idempotent (keyed anti-join) appends — a foreachBatch replay after
-        # a mid-batch failure must not duplicate already-written rows
-        try:
-            idempotent_append(spark, extracted, spans_dir, key=["doc_id", "order"])
-            idempotent_append(spark, chunks, chunks_dir, key="id")
-            idempotent_append(spark, lineage, lineage_dir, key=["doc_id", "status"])
-        finally:
-            # a long stream must not keep every micro-batch's caches
-            release_extraction(lineage)
+        # document_exists skip, src/storage/postgres.py:253-262);
+        # dropDuplicates handles a doc appearing twice INSIDE one
+        # micro-batch. A replayed batch id keeps its run_id, so the keyed
+        # appends drop what its first attempt already wrote.
+        prior = spark.read.parquet(lineage_dir) if has_table(lineage_dir) else None
+        todo = resume_filter(batch_df.dropDuplicates(["doc_id"]), prior)
+        commit_extraction(spark, todo, out_dir, run_id=f"{run_id}-b{batch_id}")
 
     q = (
         stream.writeStream.foreachBatch(process_batch)

@@ -73,12 +73,7 @@ def main() -> None:
         base_attributes_frame,
         mixer_frame,
     )
-    from docling_rag_spark.sources.sinks import (
-        _has_parquet_files,
-        _recover_swap,
-        _swap_in,
-        idempotent_append,
-    )
+    from docling_rag_spark.sources.sinks import has_table, idempotent_append, replace
 
     spark = SparkSession.builder.appName("docling-rag-attributes").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -93,13 +88,13 @@ def main() -> None:
     if not args.mix_only:
         docs = spark.read.parquet(args.input)
         todo = docs
-        if args.resume and _has_parquet_files(attr_dir):
+        if args.resume and has_table(attr_dir):
             done = spark.read.parquet(attr_dir).select("doc_id")
             todo = docs.join(done, "doc_id", "left_anti")
         tagged = base_attributes_frame(todo)
         idempotent_append(spark, tagged, attr_dir, key="doc_id")
         n_tagged = spark.read.parquet(attr_dir).count()
-    elif not _has_parquet_files(attr_dir):
+    elif not has_table(attr_dir):
         raise SystemExit(f"--mix-only: no committed attributes at {attr_dir}")
 
     if args.mix or args.mix_only:
@@ -109,11 +104,8 @@ def main() -> None:
 
             with open(args.policy) as fh:
                 policy = json.load(fh)
-        mix_dir = os.path.join(args.output, "mix_verdicts")
-        _recover_swap(mix_dir)
         verdicts = mixer_frame(spark.read.parquet(attr_dir), policy)
-        verdicts.write.mode("overwrite").parquet(mix_dir + ".tmp")
-        _swap_in(mix_dir)
+        replace(verdicts, os.path.join(args.output, "mix_verdicts"))
 
     print(f"attributes_job done run_id={run_id} attributes_total={n_tagged}")
     spark.stop()

@@ -8,16 +8,21 @@ its session from the submit conf (it does not call session.get_spark), so
 ship get_spark's settings with it, including
 ``--conf spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``:
 without it AQE cannot coalesce the partitions of an exchange inside a
-cached plan. run_extraction(persist_blocks=True) caches the kernel output
-in both modes; in spread mode that frame holds the doc_id exchange in
-front of the stitch kernel.
+cached plan. commit_extraction caches the kernel output in both modes; in
+spread mode that frame holds the doc_id exchange in front of the stitch
+kernel.
 
-Outputs under --output:
-  extracted_spans/   ordered (doc_id, order, kind, text, media_ref, page_num)
-  chunks/            reference-recipe chunks (md5 ids, 512-token budget)
-  lineage/           per-doc checkpoint rows (run_id, partition_id, status,
-                     error, n_spans_in, n_blocks_out)
+Outputs under --output, written by one pipeline.commit_extraction call
+(the streaming ingest's commit too): keyed idempotent appends, lineage
+last.
+  extracted_spans/   ordered (doc_id, order, kind, text, media_ref,
+                     page_num), key (doc_id, order)
+  chunks/            reference-recipe chunks (md5 ids, 512-token budget;
+                     an embedding column with --embed), key id
   doc_metadata/      per-doc rollup (doc_type, language, num_chunks, ...)
+                     of the processed docs, key doc_id
+  lineage/           per-doc checkpoint rows (run_id, partition_id, status,
+                     error, n_spans_in, n_blocks_out), key (run_id, doc_id)
 
 --resume anti-joins the existing lineage (status=processed) so a killed run
 re-does only unfinished documents (E16, reference postgres.py:253-262).
@@ -65,16 +70,13 @@ def main() -> None:
                    help="attach embeddings to chunks (E14 stage)")
     args = p.parse_args()
 
-    from datetime import datetime, timezone
-
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from docling_rag_spark.pipeline import doc_metadata, resume_filter, run_extraction
+    from docling_rag_spark.pipeline import commit_extraction, resume_filter
     from docling_rag_spark.sources.sinks import (
-        _has_parquet_files,
         delete_docs,
-        idempotent_append,
+        has_table,
         marker_read,
         marker_remove,
         marker_write,
@@ -99,12 +101,12 @@ def main() -> None:
 
     lineage_dir = os.path.join(args.output, "lineage")
     prior = None
-    if args.resume and _has_parquet_files(lineage_dir):
+    if args.resume and has_table(lineage_dir):
         prior = spark.read.parquet(lineage_dir)
 
-    # resume-filter ONCE here so doc_metadata below also sees only the docs
-    # this run actually processes (metadata over the full input would append
-    # empty/duplicate rows for already-done docs on --resume)
+    # resume-filter ONCE here so commit_extraction's doc_metadata also sees
+    # only the docs this run actually processes (metadata over the full
+    # input would append empty/duplicate rows for already-done docs)
     modified_col = (
         "modified_at"
         if args.reingest_modified and "modified_at" in docs.columns
@@ -137,39 +139,13 @@ def main() -> None:
             marker_write(pending_marker)
             for sub in ("extracted_spans", "chunks", "doc_metadata"):
                 delete_docs(spark, os.path.join(args.output, sub), redo_ids)
-    extracted, chunks, lineage = run_extraction(
-        todo,
-        run_id=run_id,
-        mode=args.mode,
-        repartition_to=args.repartition_to,
-        persist_blocks=True,  # all four outputs materialize from one kernel pass
-        # conservative ingested_at = job start: a source modified DURING the
-        # job must still trip the E17 predicate on the next run
-        run_ts=datetime.now(timezone.utc),
+    commit_extraction(
+        spark, todo, args.output, run_id, mode=args.mode,
+        embed=args.embed, repartition_to=args.repartition_to,
     )
-    # Exactly-once across crashes: every output is an idempotent keyed
-    # append, and the lineage COMMIT is written LAST — a job killed between
-    # an output write and the lineage write re-processes those docs on
-    # --resume, but the key anti-joins drop the replayed rows (the batch
-    # analog of the streaming sink's guarantee; reference ON CONFLICT DO
-    # NOTHING, src/storage/postgres.py:104-106).
-    idempotent_append(
-        spark, extracted, os.path.join(args.output, "extracted_spans"),
-        key=["doc_id", "order"],
-    )
-    if args.embed:
-        from docling_rag_spark.operators.embed import embed_chunks
-
-        chunks = embed_chunks(chunks)
-    idempotent_append(spark, chunks, os.path.join(args.output, "chunks"), key="id")
-    meta = doc_metadata(todo, extracted, chunks)
-    idempotent_append(
-        spark, meta, os.path.join(args.output, "doc_metadata"), key="doc_id"
-    )
-    idempotent_append(spark, lineage, lineage_dir, key=["run_id", "doc_id"])
     marker_remove(pending_marker)  # replacement fully committed
 
-    n = lineage.sparkSession.read.parquet(lineage_dir)
+    n = spark.read.parquet(lineage_dir)
     stats = {r["status"]: r["count"] for r in n.groupBy("status").count().collect()}
     # this-run count from the lineage that was just appended (cumulative
     # totals alone can't show that a --resume run processed 0 new docs)

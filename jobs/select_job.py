@@ -94,8 +94,10 @@ def main() -> None:
 
     from docling_rag_spark.operators.training_set import select_training_chunks
     from docling_rag_spark.sources.sinks import (
-        _has_parquet_files,
+        has_table,
         idempotent_append,
+        marker_read,
+        replace,
     )
 
     spark = SparkSession.builder.appName("docling-rag-select").getOrCreate()
@@ -115,7 +117,7 @@ def main() -> None:
 
     lineage_dir = os.path.join(args.output, "selection_lineage")
     done_docs = None
-    if args.resume and _has_parquet_files(lineage_dir):
+    if args.resume and has_table(lineage_dir):
         # ANY lineage row (selected or fully filtered) marks the doc done —
         # otherwise zero-selected docs would re-score forever on resume
         done_docs = spark.read.parquet(lineage_dir).select("doc_id")
@@ -168,16 +170,8 @@ def main() -> None:
 
     if args.pack:
         from docling_rag_spark.operators.training_set import pack_chunks
-        from docling_rag_spark.sources.sinks import (
-            _recover_swap,
-            _swap_in,
-            marker_read,
-            marker_write,
-        )
 
         pack_dir = os.path.join(args.output, "packed_sequences")
-        marker = os.path.join(pack_dir, "_PACKED_N")
-        _recover_swap(pack_dir)
         committed = spark.read.parquet(
             os.path.join(args.output, "selected_chunks")
         )
@@ -192,8 +186,8 @@ def main() -> None:
         # docs) while packed_sequences still reflects the PREVIOUS commit —
         # the marker mismatch forces the repack that heals that window.
         packed_n = None
-        if _has_parquet_files(pack_dir):
-            txt = marker_read(marker)
+        if has_table(pack_dir):
+            txt = marker_read(os.path.join(pack_dir, "_PACKED_N"))
             if txt is not None:
                 packed_n = int(txt.strip() or "-1")
         if this_run == 0 and packed_n == n_committed:
@@ -202,19 +196,12 @@ def main() -> None:
                 f"({n_committed} rows), keeping {pack_dir}"
             )
         else:
-            # atomic replace via the sinks swap protocol (write .tmp,
-            # rename swap, crash windows healed on entry) — a plain
-            # mode('overwrite') deletes the target BEFORE writing, so a
-            # crash mid-pack would leave a reader facing a missing/partial
-            # table. The marker is written INTO .tmp so it arrives with
-            # the same rename that publishes the pack.
-            pack_chunks(committed).write.mode("overwrite").parquet(
-                pack_dir + ".tmp"
+            # atomic replace: the marker arrives with the same rename
+            # that publishes the pack
+            replace(
+                pack_chunks(committed), pack_dir,
+                files={"_PACKED_N": str(n_committed)},
             )
-            marker_write(
-                os.path.join(pack_dir + ".tmp", "_PACKED_N"), str(n_committed)
-            )
-            _swap_in(pack_dir)
     print(
         f"select_job done run_id={run_id} docs_this_run={this_run} "
         f"lineage_total={stats}"

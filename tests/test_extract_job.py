@@ -105,3 +105,27 @@ def test_extract_job_refuses_resume_after_interrupted_reingest(
     # finishing the re-ingest converges and clears the marker
     _run_job(monkeypatch, capsys, spark, base + ["--reingest-modified", "--run-id", "r3"])
     assert marker_read(os.path.join(out, "_reingest_pending")) is None
+
+
+def test_extract_job_embed_adds_only_the_embedding(spark, tmp_path, monkeypatch, capsys):
+    """--embed: chunks carry an EMBED_DIM float vector; every other column
+    and output is the run without it."""
+    from docling_rag_spark.operators.embed import EMBED_DIM
+
+    inp = str(tmp_path / "in")
+    _write_input(spark, inp)
+    outs = {}
+    for flag in ([], ["--embed"]):
+        outs[bool(flag)] = out = str(tmp_path / f"out{len(flag)}")
+        argv = ["--input", inp, "--output", out, "--run-id", "r1"] + flag
+        assert _run_job(monkeypatch, capsys, spark, argv) == 8
+    chunks = spark.read.parquet(os.path.join(outs[True], "chunks"))
+    assert dict(chunks.dtypes)["embedding"] == "array<float>"
+    assert {len(r["embedding"]) for r in chunks.collect()} == {EMBED_DIM}
+
+    def rows(out, name):
+        df = spark.read.parquet(os.path.join(out, name)).drop("embedding", "ingested_at")
+        return sorted(map(tuple, df.select(sorted(df.columns)).collect()), key=repr)
+
+    for name in OUTPUTS:
+        assert rows(outs[False], name) == rows(outs[True], name), name

@@ -18,14 +18,15 @@ import uuid
 import pytest
 
 from docling_rag_spark.sources.sinks import (
-    _has_parquet_files,
     _HadoopFS,
     _recover_swap,
     delete_docs,
+    has_table,
     idempotent_append,
     marker_read,
     marker_remove,
     marker_write,
+    replace,
 )
 
 
@@ -49,8 +50,8 @@ def test_idempotent_append(spark, tmp_path, as_path):
     got = sorted((r["id"], r["v"]) for r in spark.read.parquet(path).collect())
     assert got == [(1, "a"), (2, "b"), (3, "c")]
     # the probe sees the table as non-empty
-    assert _has_parquet_files(path)
-    assert not _has_parquet_files(as_path(tmp_path / "missing"))
+    assert has_table(path)
+    assert not has_table(as_path(tmp_path / "missing"))
 
 
 def test_append_under_temporary_named_root(spark, tmp_path, as_path):
@@ -73,11 +74,11 @@ def test_probe_ignores_files_spark_does_not_read(spark, tmp_path, as_path):
     attempt = tmp_path / "t" / "_temporary" / "0"
     attempt.mkdir(parents=True)
     part.rename(attempt / part.name)
-    assert not _has_parquet_files(as_path(tmp_path / "t"))
+    assert not has_table(as_path(tmp_path / "t"))
     # a partition directory counts, even one whose column starts with "_"
     (tmp_path / "t" / "_k=1").mkdir()
     (attempt / part.name).rename(tmp_path / "t" / "_k=1" / part.name)
-    assert _has_parquet_files(as_path(tmp_path / "t"))
+    assert has_table(as_path(tmp_path / "t"))
     assert spark.read.parquet(as_path(tmp_path / "t")).count() == 1
 
 
@@ -150,6 +151,34 @@ def test_delete_docs(spark, tmp_path, as_path):
     assert _rows(spark, path) == [("a", 1), ("c", 3)]
 
 
+def test_replace_with_files(spark, tmp_path, as_path):
+    """replace() publishes the table and its small files with one rename;
+    a crash left after its .tmp write heals on the next entry: before the
+    first rename the tmp is discarded, after it the tmp (with its file) is
+    adopted."""
+    fs = _HadoopFS(as_path(tmp_path))
+    path = as_path(tmp_path / "r")
+    schema = "doc_id string, v int"
+    replace(spark.createDataFrame([("a", 1)], schema), path, files={"_N": "1"})
+    assert _rows(spark, path) == [("a", 1)] and marker_read(path + "/_N") == "1"
+    two = spark.createDataFrame([("b", 2), ("c", 3)], schema)
+    replace(two, path, files={"_N": "2"})
+    assert _rows(spark, path) == [("b", 2), ("c", 3)] and marker_read(path + "/_N") == "2"
+
+    def crash_after_tmp_write(v):
+        spark.createDataFrame([("d", v)], schema).write.parquet(path + ".tmp")
+        marker_write(path + ".tmp/_N", str(v))
+
+    crash_after_tmp_write(9)  # no rename yet: the target stays
+    assert has_table(path)
+    assert _rows(spark, path) == [("b", 2), ("c", 3)] and marker_read(path + "/_N") == "2"
+    crash_after_tmp_write(4)
+    fs.rename(path, path + ".old")  # first rename done: the tmp is the new table
+    assert has_table(path)
+    assert _rows(spark, path) == [("d", 4)] and marker_read(path + "/_N") == "4"
+    assert not fs.exists(path + ".old") and not fs.exists(path + ".tmp")
+
+
 def test_marker_roundtrip(spark, tmp_path, as_path):
     m = as_path(tmp_path / "m" / "_MARK")
     os.makedirs(tmp_path / "m")
@@ -196,7 +225,7 @@ def test_bare_path_resolves_against_default_fs(spark, tmp_path):
             batch = spark.createDataFrame([(v,)], "id int")
             idempotent_append(spark, batch, out)
         assert sorted(r["id"] for r in spark.read.parquet(out).collect()) == [1, 2]
-        assert _has_parquet_files(out)
+        assert has_table(out)
         assert marker_read(out + "/_SUCCESS") == ""  # Spark's commit marker
         assert marker_read(out + "/_MISSING") is None
     finally:

@@ -34,11 +34,30 @@ def test_resume_anti_join_exactly_once(spark, small_corpus):
     todo2 = resume_filter(small_corpus, partial)
     assert todo2.count() == 7
     # resumed run processes exactly the remainder; union is complete & disjoint
-    _, _, lineage2 = run_extraction(small_corpus, run_id="r2", prior_lineage=partial)
+    _, _, lineage2 = run_extraction(todo2, run_id="r2")
     done2 = {r["doc_id"] for r in lineage2.collect()}
     done1 = {r["doc_id"] for r in partial.collect()}
     assert done1 | done2 == {f"doc{i}" for i in range(12)}
     assert not (done1 & done2)
+
+
+def test_ingested_at_ignores_session_time_zone(spark, small_corpus):
+    """The lineage stamp is the run_ts instant whatever the session time
+    zone (extract_job builds its session without get_spark's UTC); a naive
+    run_ts is read as UTC."""
+    import datetime as dt
+
+    run_ts = dt.datetime(2026, 1, 15, 12, 0, tzinfo=dt.timezone.utc)
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        for ts in (run_ts, run_ts.replace(tzinfo=None)):
+            _, _, lin = run_extraction(small_corpus.limit(2), run_id="tz", run_ts=ts)
+            got = {r[0] for r in lin.select(F.unix_timestamp("ingested_at")).collect()}
+            assert got == {int(run_ts.timestamp())}, ts
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_failed_docs_dead_lettered_not_fatal(spark):
@@ -163,12 +182,12 @@ def test_auto_mode_picks_narrow_on_uniform_spread_on_giant(
     """choose_extraction_mode: a uniform corpus stays narrow (spread would
     pay a payload shuffle for nothing); a corpus with one true giant doc
     (absolutely large AND far off the mean) flips to spread; and
-    run_extraction(mode='auto') produces output identical to the explicit
-    mode on both corpora."""
+    commit_extraction(mode='auto') commits output identical to the
+    explicit mode's on both corpora."""
     from docling_rag_spark.pipeline import (
         AUTO_SKEW_MIN_SPANS,
         choose_extraction_mode,
-        run_extraction,
+        commit_extraction,
     )
 
     uniform = spark.createDataFrame(
@@ -208,10 +227,14 @@ def test_auto_mode_picks_narrow_on_uniform_spread_on_giant(
     monkeypatch.undo()
     assert "ReadSchema: struct<spans:array<struct<kind:string>>>" in plans[0], plans
 
-    # auto output ≡ the explicitly chosen mode's output
+    # auto output ≡ the explicitly chosen mode's output, table by table
     for corpus, explicit in ((uniform, "narrow"), (skewed, "spread")):
-        got, _, _ = run_extraction(corpus, run_id="auto", mode="auto")
-        want, _, _ = run_extraction(corpus, run_id="auto", mode=explicit)
-        a = sorted(map(tuple, got.collect()))
-        b = sorted(map(tuple, want.collect()))
-        assert a == b
+        out = {m: str(tmp_path / explicit / m) for m in ("auto", explicit)}
+        for mode, path in out.items():
+            commit_extraction(spark, corpus, path, "auto", mode=mode)
+        for name in ("extracted_spans", "chunks", "doc_metadata"):
+            got, want = (
+                sorted(map(tuple, spark.read.parquet(f"{p}/{name}").collect()))
+                for p in out.values()
+            )
+            assert got and got == want, (explicit, name)

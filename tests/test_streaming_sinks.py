@@ -40,11 +40,14 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     assert docs2 == {f"s{i}" for i in range(6)}
     # no duplicate chunk ids
     assert chunks2.count() == chunks2.select("id").distinct().count()
+    # the batch job's four outputs: doc_metadata holds one row per document
+    meta = spark.read.parquet(os.path.join(out, "doc_metadata"))
+    assert sorted(r["doc_id"] for r in meta.collect()) == sorted(docs2)
 
 
 def test_stream_ingest_releases_batch_caches(spark, tmp_path):
-    """Each micro-batch unpersists what its run_extraction cached: a long
-    stream does not accumulate persisted RDDs."""
+    """Each micro-batch unpersists what its commit_extraction cached: a
+    long stream does not accumulate persisted RDDs."""
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
     _write_batch(spark, inp, ["r0", "r1"])
@@ -52,8 +55,55 @@ def test_stream_ingest_releases_batch_caches(spark, tmp_path):
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
     stream_ingest(spark, inp, out, max_files_per_trigger=1)
     lineage = spark.read.parquet(os.path.join(out, "lineage"))
-    assert lineage.select("run_id").distinct().count() == 2  # two micro-batches
+    # two micro-batches, lineage keyed (run_id, doc_id) as the batch job's
+    assert sorted((r["run_id"], r["doc_id"]) for r in lineage.collect()) == [
+        ("stream-b0", "r0"), ("stream-b0", "r1"), ("stream-b1", "r2"), ("stream-b1", "r3"),
+    ]
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) <= before
+
+
+def test_stream_replayed_batch_keeps_one_lineage_row_per_doc(spark, tmp_path):
+    """A batch whose commit never reached the checkpoint runs again under
+    the same batch id: its failed document is extracted again, and the
+    (run_id, doc_id) key keeps one lineage row for it."""
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    bad = [{"kind": "pdf", "text": "NOT A PDF", "media_ref": None, "offset": 0}]
+    spark.createDataFrame(
+        [("ok", build_spans("ok", "some text the and of")), ("bad", bad)],
+        schema=DOCUMENTS_SPANS_SCHEMA,
+    ).coalesce(1).write.parquet(inp)
+    stream_ingest(spark, inp, out)
+    commits = os.path.join(out, "_checkpoint", "commits")
+    for f in ("0", ".0.crc"):  # crash before the batch commit
+        os.remove(os.path.join(commits, f))
+    stream_ingest(spark, inp, out)
+    assert sorted(os.listdir(commits)) == [".0.crc", "0"]  # batch 0 ran again
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    got = sorted((r["run_id"], r["doc_id"], r["status"]) for r in lineage.collect())
+    assert got == [("stream-b0", "bad", "failed"), ("stream-b0", "ok", "processed")]
+
+
+def test_stream_retried_doc_gets_metadata_once_it_succeeds(spark, tmp_path):
+    """A document that fails in one micro-batch and is redelivered fixed in
+    the next gets one doc_metadata row, written by the run that processed
+    it (a failed run writes none, so the keyed append cannot keep a stale
+    zero-chunk row)."""
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    bad = [{"kind": "pdf", "text": "NOT A PDF", "media_ref": None, "offset": 0}]
+    for spans in (bad, build_spans("fix", "some text the and of")):
+        spark.createDataFrame([("fix", spans)], schema=DOCUMENTS_SPANS_SCHEMA).coalesce(
+            1
+        ).write.mode("append").parquet(inp)
+    stream_ingest(spark, inp, out, max_files_per_trigger=1)
+    lineage = spark.read.parquet(os.path.join(out, "lineage"))
+    assert sorted((r["run_id"], r["status"]) for r in lineage.collect()) == [
+        ("stream-b0", "failed"), ("stream-b1", "processed"),
+    ]
+    meta = spark.read.parquet(os.path.join(out, "doc_metadata")).collect()
+    assert [r["doc_id"] for r in meta] == ["fix"]
+    assert meta[0]["num_chunks"] > 0
 
 
 def test_idempotent_append(spark, tmp_path):

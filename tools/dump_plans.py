@@ -9,6 +9,7 @@ is. Run: ``python tools/dump_plans.py``."""
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -152,6 +153,24 @@ def splice(text: str, built: dict[str, str]) -> str:
     return out + "".join(todo.values())
 
 
+def kept_lines(details: str) -> list[str]:
+    """The scan-detail lines of a formatted plan that PLANS.md keeps, with
+    the repository path dropped and a memo name's two digests written as
+    ``<code>`` and ``<fp>``: the package code digest changes on every
+    package edit and the source fingerprint (path, size, mtime) on every
+    host, so a section would otherwise change with every regeneration."""
+    from docling_rag_spark import artifacts
+
+    memo = re.compile(
+        rf"_{re.escape(artifacts._code_hash())}_([^/\]]+)_{artifacts._DIGEST}\.parquet"
+    )
+    return [
+        memo.sub(r"_<code>_\1_<fp>.parquet", line.replace(f"{REPO}/", ""))
+        for line in details.splitlines()
+        if any(k in line for k in ("PushedFilters", "ReadSchema", "Location"))
+    ]
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -213,11 +232,9 @@ def main() -> None:
         # keep the operator tree + the interesting scan details, drop the
         # long per-node field dumps
         tree, _, details = txt.partition("\n\n")
-        keep = [l.replace(f"{REPO}/", "") for l in details.splitlines()
-                if any(k in l for k in ("PushedFilters", "ReadSchema", "Location")) ]
         sections[name] = "\n".join([
             f"## {name}", "", COMMENT.get(name, ""), "", "```",
-            tree.strip()[:4000], *(keep[:8]), "```", "", ""])
+            tree.strip()[:4000], *(kept_lines(details)[:8]), "```", "", ""])
     path = REPO / "PLANS.md"
     path.write_text(splice(path.read_text() if path.exists() else PREAMBLE, sections))
     print(f"updated {len(sections)} sections of PLANS.md")
